@@ -55,7 +55,9 @@ def split_hot_cold(df: DataFrame, hot: list[int],
     if not hot:
         return df.where(F.lit(False)), df
     hot_df = df.where(F.col(cell_col).isin(hot))
-    cold_df = df.where(~F.col(cell_col).isin(hot))
+    # ~isin is NULL for a NULL cell; such rows are never hot, so keep
+    # them on the cold path explicitly
+    cold_df = df.where(~F.col(cell_col).isin(hot) | F.col(cell_col).isNull())
     return hot_df, cold_df
 
 

@@ -46,13 +46,21 @@ def _allocation_file() -> str | None:
         return None
     # deterministic per-user path, atomically replaced — reused across
     # driver processes instead of leaking one NamedTemporaryFile per
-    # process (r6 advice fix)
+    # process. The staging file is created O_EXCL under
+    # an unpredictable name, so a link planted in the shared temp dir
+    # cannot redirect the write; the rename replaces a planted link at
+    # the final path instead of following it.
     path = os.path.join(
         tempfile.gettempdir(), f"kaza-fairscheduler-{os.getuid()}.xml")
-    tmp = f"{path}.{os.getpid()}.tmp"
-    with open(tmp, "w") as f:
-        f.write(text)
-    os.replace(tmp, path)
+    fd, tmp = tempfile.mkstemp(prefix=os.path.basename(path) + ".",
+                               suffix=".tmp", dir=os.path.dirname(path))
+    try:
+        with os.fdopen(fd, "w") as f:
+            f.write(text)
+        os.replace(tmp, path)
+    except BaseException:
+        os.unlink(tmp)
+        raise
     _ALLOC_FILE.append(path)
     return path
 

@@ -17,7 +17,9 @@ layer provides the same guarantees over plain parquet:
   a pointer file (POSIX rename atomicity);
 * **per-partition lineage**: each committed partition records row count,
   wall seconds, and wrote-at timestamp — the resume set and the metrics
-  sink (S13) in one structure;
+  sink (S13) in one structure. Partitions are written one commit group
+  per Spark job, so ``wall_s`` is the group's write wall, shared by every
+  partition of the group;
 * **resume**: a re-run lists pending = requested − committed partitions
   and processes only those; a crashed run's partial files are absent from
   the manifest and invisible to readers.
@@ -30,16 +32,29 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+#: synthetic columns of the group writer: the row's index in its commit
+#: group (the staging directory key) and its order after ``layout``
+_GROUP_TAG = "__p"
+_SEQ = "__seq"
 
 
 @dataclass
 class Lineage:
+    """One committed partition's manifest entry. ``n_rows`` is read from
+    the parquet footers of ``files``; ``wall_s`` is the write wall of the
+    commit group that wrote the partition (one Spark job for the whole
+    group, so every partition of a group carries the same value — summed
+    over appended batches); ``ts`` is the commit time."""
+
     partition: str
     n_rows: int
     wall_s: float
@@ -179,6 +194,9 @@ class Catalog:
         # data/<col>=<key>/<uuid>/<file> under the table dir ('=' in the
         # partition component and hex uuids mean no component collides
         # with 'data'), so compare on that 3-component suffix instead.
+        # A write that crashed before its commit may also leave a
+        # staging directory data/_stage-<uuid>/__p=<i>/<file>; no
+        # manifest names those files, so they are orphans too.
         def _canon(p: str) -> tuple:
             return tuple(os.path.normpath(p).split(os.sep)[-3:])
 
@@ -215,9 +233,11 @@ class Catalog:
             for full in orphans:
                 os.remove(full)
         if not dry_run:
-            # prune now-empty uuid dirs bottom-up (keep the table root)
-            for dirpath, dirs, files in os.walk(ddir, topdown=False):
-                if dirpath != ddir and not dirs and not files:
+            # prune now-empty dirs bottom-up (keep the table root); list
+            # afresh, since os.walk's listing predates the removals below
+            # it (a staging dir empties only once its __p=<i> dirs go)
+            for dirpath, _dirs, _files in os.walk(ddir, topdown=False):
+                if dirpath != ddir and not os.listdir(dirpath):
                     os.rmdir(dirpath)
         return {"removed": removed, "kept": kept,
                 "bytes_reclaimed": reclaimed}
@@ -233,8 +253,7 @@ class Catalog:
         dropped. Distinct raw values whose str() collide (a string
         column holding the literal 'None' next to NULLs) would silently
         merge manifest entries — refused loudly."""
-        vals = [r[0] for r in
-                df.select(partition_col).distinct().orderBy(partition_col).collect()]
+        vals = [r[0] for r in df.select(partition_col).distinct().collect()]
         pairs = sorted(((v, str(v)) for v in vals), key=lambda p: p[1])
         keys = [k for _, k in pairs]
         if len(set(keys)) != len(keys):
@@ -245,24 +264,56 @@ class Catalog:
                 "the partition column so keys are unique")
         return pairs
 
-    def _write_partition(self, spark: SparkSession, df: DataFrame,
-                         name: str, partition_col: str, value, key: str,
-                         layout=None) -> tuple[list[str], int, float]:
-        """Write one partition's rows into a fresh uuid directory and
-        return (files, n_rows, wall_s). Shared by the batch writer and
-        the streaming append sink so their on-disk layouts cannot
-        diverge."""
+    def _write_group(self, df: DataFrame, name: str, partition_col: str,
+                     group: list, layout=None
+                     ) -> tuple[dict[str, tuple[list[str], int]], float]:
+        """Write one commit group's partitions with ONE Spark job and
+        return ``({key: (files, n_rows)}, wall_s)`` — nothing is
+        committed. Shared by the batch writer and the streaming append
+        sink so their on-disk layouts cannot diverge.
+
+        Rows are tagged with their group index (``_GROUP_TAG``: a CASE
+        over the RAW values, eqNullSafe as in :meth:`_partition_values`),
+        written ``partitionBy`` the tag into ``data/_stage-<uuid>/``, and
+        each ``<tag>=i`` directory is renamed onto
+        ``data/<col>=<key>/<uuid>/``. The tag, not the real column, is
+        the directory key, so the partition column stays inside the
+        files. Row counts come from the parquet footers; a value with no
+        rows gets no files and ``n_rows`` 0. A crash before the caller's
+        commit leaves staged or moved files that no manifest names —
+        orphans for :meth:`vacuum`."""
+        if not group:
+            return {}, 0.0
         t0 = time.time()
-        out = os.path.join(self._tdir(name), "data",
-                           f"{partition_col}={key}", uuid.uuid4().hex)
-        part_df = df.where(F.col(partition_col).eqNullSafe(F.lit(value)))
+        ddir = os.path.join(self._tdir(name), "data")
+        stage = os.path.join(ddir, f"_stage-{uuid.uuid4().hex}")
+        col = F.col(partition_col)
+        tag = F.when(col.eqNullSafe(F.lit(group[0][0])), F.lit(0))
+        for i, (v, _) in enumerate(group[1:], 1):
+            tag = tag.when(col.eqNullSafe(F.lit(v)), F.lit(i))
+        tagged = df.withColumn(_GROUP_TAG, tag).where(F.col(_GROUP_TAG).isNotNull())
         if layout is not None:
-            part_df = layout(part_df)
-        part_df.write.mode("overwrite").parquet(out)
-        files = [os.path.join(out, f) for f in os.listdir(out)
-                 if f.endswith(".parquet")]
-        n = spark.read.parquet(*files).count() if files else 0
-        return files, n, round(time.time() - t0, 3)
+            tagged = layout(tagged)
+        # the partitioned writer sorts each task by the tag, which would
+        # scramble the layout's row order inside a partition; sorting on
+        # (tag, arrival order) first satisfies it and keeps that order
+        (tagged.withColumn(_SEQ, F.monotonically_increasing_id())
+         .sortWithinPartitions(_GROUP_TAG, _SEQ).drop(_SEQ)
+         .write.partitionBy(_GROUP_TAG).parquet(stage))
+        out = {}
+        for i, (_, k) in enumerate(group):
+            src = os.path.join(stage, f"{_GROUP_TAG}={i}")
+            if not os.path.isdir(src):
+                out[k] = ([], 0)
+                continue
+            dst = os.path.join(ddir, f"{partition_col}={k}", uuid.uuid4().hex)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.replace(src, dst)
+            files = sorted(os.path.join(dst, f) for f in os.listdir(dst)
+                           if f.endswith(".parquet"))
+            out[k] = (files, sum(pq.read_metadata(f).num_rows for f in files))
+        shutil.rmtree(stage)
+        return out, round(time.time() - t0, 3)
 
     def write_partitioned(self, spark: SparkSession, df: DataFrame, name: str,
                           partition_col: str,
@@ -277,15 +328,19 @@ class Catalog:
         ``fail_after`` injects a crash after N commits (tests).
 
         ``layout`` (optional ``DataFrame -> DataFrame``) rearranges each
-        partition's rows before its write — pass
+        commit group's rows before its write; it sees the whole group
+        (all of the group's partitions, plus the ``__p`` tag column it
+        must keep), so a file count it sets is per group, and the
+        writer then splits each file by partition. Pass
         ``sources.layout.cell_clustered`` to get Morton-clustered files
         whose footer min/max stats prune AOI-bounded reads (the
         Iceberg-style sort-order half of the table spec; see
         tools/layout_probe.py for the measured effect).
 
-        Scale note: the per-group filter is partition-pruned by Catalyst
-        (IN-list on the partition column); on a real cluster each group
-        is one job over only its partitions' input.
+        Scale note: each commit group is ONE Spark job (see
+        :meth:`_write_group`) that scans the input once, whatever the
+        group's partition count; the snapshot commit after it is
+        driver-side file work only.
         """
         self.create_table(name)
         committed = self.committed_partitions(name)
@@ -293,14 +348,14 @@ class Catalog:
         pending = [(v, k) for v, k in want if k not in committed]
         n_commits = 0
         for g0 in range(0, len(pending), partitions_per_commit):
-            group = pending[g0:g0 + partitions_per_commit]
+            written, wall = self._write_group(
+                df, name, partition_col,
+                pending[g0:g0 + partitions_per_commit], layout=layout)
             manifest = self._read_manifest(name)
-            for v, k in group:
-                files, n, wall = self._write_partition(
-                    spark, df, name, partition_col, v, k, layout=layout)
+            ts = time.time()
+            for k, (files, n) in written.items():
                 manifest["partitions"][k] = {
-                    "n_rows": n, "wall_s": wall,
-                    "ts": time.time(), "files": files,
+                    "n_rows": n, "wall_s": wall, "ts": ts, "files": files,
                 }
             manifest["snapshot"] += 1
             self._commit(name, manifest)
@@ -315,7 +370,8 @@ class Catalog:
                      layout=None) -> dict:
         """Append one (micro-)batch into the table: new files land in the
         batch's partitions, partition lineage MERGES (files +=, n_rows
-        +=), and the whole batch commits as ONE snapshot.
+        +=), and the whole batch is written by ONE Spark job and commits
+        as ONE snapshot, whatever its partition count.
 
         The exactly-once half of a streaming foreachBatch sink: Spark
         replays the in-flight batch after a failure, so a ``batch_id``
@@ -331,16 +387,17 @@ class Catalog:
         if batch_id is not None and batch_id <= manifest.get("last_batch_id", -1):
             return {"written": 0, "n_rows": 0, "replayed_batch": True}
         parts = self._partition_values(df, partition_col)
+        written, wall = self._write_group(df, name, partition_col, parts,
+                                          layout=layout)
         total = 0
-        for v, k in parts:
-            files, n, wall = self._write_partition(
-                spark, df, name, partition_col, v, k, layout=layout)
+        ts = time.time()
+        for k, (files, n) in written.items():
             total += n
             entry = manifest["partitions"].setdefault(
                 k, {"n_rows": 0, "wall_s": 0.0, "ts": 0.0, "files": []})
             entry["n_rows"] += n
             entry["wall_s"] = round(entry["wall_s"] + wall, 3)
-            entry["ts"] = time.time()
+            entry["ts"] = ts
             entry["files"] += files
         manifest["snapshot"] += 1
         if batch_id is not None:

@@ -114,7 +114,7 @@ def stream_ingest_catalog(stream: DataFrame, catalog, table: str,
     sink is exactly-once end-to-end (Spark's checkpoint makes delivery
     at-least-once; the manifest makes the commit idempotent).
 
-    ``layout`` passes through to the per-partition writer — use
+    ``layout`` passes through to the group writer — use
     ``sources.layout.cell_clustered`` to keep streaming ingest
     Morton-clustered exactly like batch ingest (same pruning story).
 

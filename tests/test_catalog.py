@@ -251,8 +251,8 @@ def test_vacuum_removes_only_unreferenced_files(spark, tmp_path):
     snap1_rows = cat.read_table(spark, "t", snapshot=1).count()
 
     # a crashed write: files on disk, no manifest commit
-    orphan_files, n, _ = cat._write_partition(
-        spark, df.where(F.col("pt") == 0), "t", "pt", 0, "0")
+    (orphan_files, n), = cat._write_group(
+        df.where(F.col("pt") == 0), "t", "pt", [(0, "0")])[0].values()
     assert n == 10 and all(__import__("os").path.exists(f) for f in orphan_files)
 
     dry = cat.vacuum("t", dry_run=True)
@@ -294,3 +294,115 @@ def test_vacuum_root_spelling_independent(spark, tmp_path):
     res = cat2.vacuum("t")
     assert res["kept"] == dry["kept"]    # only sidecars (_SUCCESS/.crc) go
     assert cat.read_table(spark, "t").count() == 20
+
+
+def _by_partition(cat, spark, name, col):
+    """{partition key: sorted rows} read through the catalog."""
+    out = {}
+    for r in cat.read_table(spark, name).collect():
+        out.setdefault(str(r[col]), []).append(tuple(r))
+    return {k: sorted(v) for k, v in out.items()}
+
+
+def test_group_write_null_and_bool_keys_in_one_commit(spark, tmp_path):
+    """One commit group holding a NULL key next to boolean keys: every
+    row lands in its own key (lineage, footer counts and read-back all
+    agree with a groupBy of the input), in one snapshot."""
+    cat = Catalog(str(tmp_path / "cat_group_types"))
+    df = spark.range(20).select(
+        F.col("id"),
+        F.when(F.col("id") < 3, F.lit(None))
+         .otherwise(F.col("id") % 3 == 0).alias("flag"))
+    res = cat.write_partitioned(spark, df, "t", "flag",
+                                partitions_per_commit=4)
+    assert res == {"written": 3, "skipped": 0, "snapshots": 1}
+    want = {str(r["flag"]): r["count"]
+            for r in df.groupBy("flag").count().collect()}
+    assert want == {"None": 3, "True": 6, "False": 11}
+    assert {l.partition: l.n_rows for l in cat.lineage("t")} == want
+    back = _by_partition(cat, spark, "t", "flag")
+    assert {k: len(v) for k, v in back.items()} == want
+    # one write job: every partition of the group shares its wall
+    assert len({l.wall_s for l in cat.lineage("t")}) == 1
+
+
+def test_crash_then_vacuum_then_resume(spark, assigned, tmp_path,
+                                       monkeypatch):
+    """A run that commits one group (fail_after=1), then a run that dies
+    between its group's Spark write and the manifest commit: vacuum
+    removes the leftover staged files and keeps every committed file,
+    and the resumed table equals a single run partition by partition."""
+    import glob
+    import os
+
+    import pyarrow.parquet as papq
+
+    cat = Catalog(str(tmp_path / "cat_crash"))
+    with pytest.raises(RuntimeError, match="injected failure"):
+        cat.write_partitioned(spark, assigned, "tiles", "unit_id",
+                              partitions_per_commit=4, fail_after=1)
+    committed = [f for l in cat.lineage("tiles") for f in l.files]
+    assert len(cat.committed_partitions("tiles")) == 4
+
+    def died(*_a, **_k):
+        raise RuntimeError("driver died before commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(papq, "read_metadata", died)
+        with pytest.raises(RuntimeError, match="driver died"):
+            cat.write_partitioned(spark, assigned, "tiles", "unit_id",
+                                  partitions_per_commit=4)
+    ddir = os.path.join(str(tmp_path / "cat_crash"), "tiles", "data")
+    staged = glob.glob(os.path.join(ddir, "_stage-*", "*", "*.parquet"))
+    assert staged
+    assert len(cat.committed_partitions("tiles")) == 4
+
+    res = cat.vacuum("tiles")
+    assert res["removed"] >= len(staged)
+    assert not glob.glob(os.path.join(ddir, "_stage-*"))
+    assert all(os.path.exists(f) for f in committed)
+
+    resumed = cat.write_partitioned(spark, assigned, "tiles", "unit_id",
+                                    partitions_per_commit=4)
+    assert resumed["skipped"] == 4 and resumed["written"] == 8
+    single = Catalog(str(tmp_path / "cat_single"))
+    single.write_partitioned(spark, assigned, "tiles", "unit_id",
+                             partitions_per_commit=4)
+    assert ({l.partition: l.n_rows for l in cat.lineage("tiles")}
+            == {l.partition: l.n_rows for l in single.lineage("tiles")})
+    assert (_by_partition(cat, spark, "tiles", "unit_id")
+            == _by_partition(single, spark, "tiles", "unit_id"))
+    assert (cat.vacuum("tiles")["kept"]
+            == sum(len(l.files) for l in cat.lineage("tiles")))
+
+
+def test_append_batch_jobs_do_not_grow_with_partitions(spark, tmp_path):
+    """A micro-batch is one write job and one snapshot whatever its
+    partition count: appending 64 partition values runs no more Spark
+    jobs than appending 2, and every lineage count equals a groupBy of
+    the input."""
+    import uuid
+
+    sc = spark.sparkContext
+    cat = Catalog(str(tmp_path / "cat_linear"))
+
+    def append_jobs(n_values: int):
+        df = spark.range(640).select(
+            F.col("id"), (F.col("id") % n_values).alias("pt"))
+        group = f"catalog-linear-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            cat.append_batch(spark, df, f"t{n_values}", "pt", batch_id=0)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        want = {str(r["pt"]): r["count"]
+                for r in df.groupBy("pt").count().collect()}
+        got = {l.partition: l.n_rows for l in cat.lineage(f"t{n_values}")}
+        assert got == want and len(got) == n_values
+        assert len(cat.snapshots(f"t{n_values}")) == 1
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    jobs2 = append_jobs(2)
+    jobs64 = append_jobs(64)
+    assert 0 < jobs64 <= jobs2, (jobs2, jobs64)

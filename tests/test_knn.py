@@ -395,3 +395,28 @@ def test_knn_per_cell_null_cells_survive_mega_peel(spark):
     null_ids = {r[0] for r in rows if r[1] is None}
     covered = {t[0] for t in b}
     assert null_ids & covered == null_ids & {t[0] for t in a}
+
+
+def test_salted_split_keeps_null_cells(spark):
+    """With a non-empty hot list, NULL-cell rows must stay on the cold
+    path (~isin(hot) is NULL for a NULL cell): the hot/cold split covers
+    every input row, and the salted kNN covers the same rows as the
+    unsalted one."""
+    from kaza_lcms_spark.plans import salting as SALT
+
+    rows = [(i, i % 3 if i % 7 else None, (i * 2654435761) % (1 << 62))
+            for i in range(60)]
+    pts = spark.createDataFrame(rows, "doc_id long, cell long, h long")
+    hot_df, cold_df = SALT.split_hot_cold(pts, [0, 1], "cell")
+    split = sorted(r[0] for r in hot_df.union(cold_df).collect())
+    assert split == [r[0] for r in rows]
+
+    unsalted = KNN.knn_per_cell(pts, k=2, cell_col="cell", id_col="doc_id",
+                                hash_col="h", salt_threshold=100)
+    salted = KNN.knn_per_cell(pts, k=2, cell_col="cell", id_col="doc_id",
+                              hash_col="h", salt_threshold=10, salt_buckets=3)
+    a = sorted(map(tuple, unsalted.collect()))
+    b = sorted(map(tuple, salted.collect()))
+    assert a == b
+    null_ids = {r[0] for r in rows if r[1] is None}
+    assert null_ids <= {t[0] for t in b}

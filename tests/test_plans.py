@@ -83,6 +83,36 @@ def test_session_defaults(spark):
     assert spark.conf.get("spark.sql.execution.arrow.pyspark.enabled") == "true"
 
 
+def test_allocation_file_staging_ignores_planted_symlink(tmp_path, monkeypatch):
+    """The fair-scheduler file is staged under an O_EXCL temp name: a
+    symlink planted at the old predictable ``<path>.<pid>.tmp`` name is
+    neither followed nor written through, and the final path holds the
+    packaged XML as a regular file."""
+    import os
+    import tempfile
+
+    from kaza_lcms_spark import session
+
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    monkeypatch.setattr(session, "_ALLOC_FILE", [])
+    path = str(tmp_path / f"kaza-fairscheduler-{os.getuid()}.xml")
+    victim = tmp_path / "victim.txt"
+    victim.write_text("keep me")
+    planted = f"{path}.{os.getpid()}.tmp"
+    os.symlink(victim, planted)
+
+    got = session._allocation_file()
+    assert got == path
+    assert victim.read_text() == "keep me"
+    assert os.path.islink(planted)
+    assert not os.path.islink(path)
+    with open(path) as f:
+        assert "rf-slot-0" in f.read()
+    # no staging file is left behind next to the final path
+    assert sorted(os.listdir(tmp_path)) == sorted(
+        [os.path.basename(path), "victim.txt", os.path.basename(planted)])
+
+
 def test_bucketed_join_is_shuffle_free(spark, fixture_dir, tmp_path):
     """Co-located join via bucketing (SURVEY.md §4 partitioning row): two
     tables bucketed+sorted on cell_id join with ZERO Exchange — the
