@@ -88,23 +88,12 @@ def tasseled_cap(bands: list[Column]) -> dict[str, Column]:
     return out
 
 
-def argmax_index(arr: Column) -> Column:
-    """1-based index of the max element, first occurrence wins ties — the
-    assemblage rule (+1 class offset) of
-    /root/reference/src/utils/assemblage.py:12-25."""
-    return F.array_position(arr, F.array_max(arr))
-
-
 def dot_fold(a: Column, b: Column) -> Column:
     """Left-to-right double-precision dot product of two array columns via
     zip_with + aggregate — deterministic accumulation order (matches the
     generated oracle SQL chain bit-for-bit)."""
     prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(dot_fold(a, a))
 
 
 def round_binary(c: Column, digits: int = 4) -> Column:

@@ -98,88 +98,98 @@ def decode(data: bytes) -> tuple[np.ndarray, str]:
     return px, _FMT_NAME[code]
 
 
-def decode_batch(blobs) -> tuple[list, list]:
-    """Decode a batch of encoded images -> (pixels list, fmt-name list).
+def arrow_views(arr):
+    """Zero-copy ``(data, offsets)`` numpy views of a null-free Arrow
+    ``binary``/``string`` array (int32 offsets): ``data`` is the uint8
+    data buffer, ``offsets[i]:offsets[i+1]`` the i-th value, offsets
+    widened to int64. Returns None for any other array (``large_*``
+    64-bit offsets, nulls, other types) so the caller takes its object
+    path."""
+    import pyarrow as pa
 
-    Bit-identical to per-image :func:`decode` (tested), but the RLE/quant
-    run expansion happens ONCE over each format group's concatenated
-    bodies instead of 3 tiny numpy calls per image — the per-image numpy
-    dispatch overhead dominates at 256-4096-byte payloads. Raw images
-    stay per-image (frombuffer is a no-copy view + reshape)."""
-    n = len(blobs)
-    pixels: list = [None] * n
-    fmts: list = [None] * n
-    rle_groups: dict[int, list[int]] = {FMT_RLE: [], FMT_QUANT: []}
-    metas = []
-    for i, data in enumerate(blobs):
-        if data[:2] != MAGIC:
-            raise ValueError("bad magic")
-        code, w, h = struct.unpack("<BII", data[2:11])
-        metas.append((code, w, h))
-        fmts[i] = _FMT_NAME[code]
-        if code == FMT_RAW:
-            pixels[i] = np.frombuffer(data, dtype=np.uint8,
-                                      offset=11).reshape(h, w)
-        elif code == FMT_RLE or code == FMT_QUANT:
-            rle_groups[code].append(i)
-        else:
-            raise ValueError(f"unknown fmt code {code}")
-    for code, idxs in rle_groups.items():
-        if not idxs:
-            continue
-        joined = b"".join(blobs[i][11:] for i in idxs)
-        runs = np.frombuffer(joined, dtype=np.uint8).reshape(-1, 2)
-        flat = np.repeat(runs[:, 1], runs[:, 0])
-        if code == FMT_QUANT:
-            flat = np.clip(np.round(flat.astype(np.float64) * _QSTEP),
-                           0, 255).astype(np.uint8)
-        off = 0
-        for i in idxs:
-            _, w, h = metas[i]
-            pixels[i] = flat[off:off + h * w].reshape(h, w)
-            off += h * w
-    return pixels, fmts
+    if (not (pa.types.is_binary(arr.type) or pa.types.is_string(arr.type))
+            or arr.null_count):
+        return None
+    _, obuf, dbuf = arr.buffers()
+    off = np.frombuffer(obuf, dtype=np.int32)[
+        arr.offset: arr.offset + len(arr) + 1].astype(np.int64)
+    return np.frombuffer(dbuf, dtype=np.uint8), off
+
+
+def decode_batch(blobs) -> tuple[list, list]:
+    """Decode a list of encoded images -> (pixels list, fmt-name list):
+    the blobs are concatenated into one buffer and decoded by
+    :func:`decode_batch_views`."""
+    off = np.zeros(len(blobs) + 1, dtype=np.int64)
+    np.cumsum([len(b) for b in blobs], out=off[1:])
+    return decode_batch_views(np.frombuffer(b"".join(blobs), dtype=np.uint8),
+                              off)
 
 
 def decode_batch_views(data: np.ndarray, off: np.ndarray) -> tuple[list, list]:
-    """:func:`decode_batch` over zero-copy Arrow binary views: ``data``
-    is the batch's contiguous uint8 data buffer, ``off[i]:off[i+1]``
-    the i-th blob. Headers parse as one vectorized (n, 11) gather; RLE
-    and quant groups run-expand once over the group's concatenated
-    bodies. Bit-identical to per-image :func:`decode` (tested)."""
+    """Decode a batch of encoded images held in one buffer -> (pixels
+    list, fmt-name list): ``data`` is the batch's contiguous uint8 data
+    (an Arrow binary data buffer, see :func:`arrow_views`),
+    ``off[i]:off[i+1]`` the i-th blob.
+
+    Bit-identical to per-image :func:`decode` (tested), and raises
+    ValueError on every blob :func:`decode` rejects. Headers parse as one
+    vectorized (n, 11) gather; the RLE/quant run expansion happens ONCE
+    over each format group's concatenated bodies instead of 3 tiny numpy
+    calls per image (per-image numpy dispatch dominates at 256-4096-byte
+    payloads). Each image's run lengths must sum to its h·w: without that
+    check one malformed body would shift pixels into every later image
+    of its group. Raw images stay per-image no-copy views."""
     n = len(off) - 1
     if n == 0:
         return [], []
     starts = np.asarray(off[:-1], dtype=np.int64)
+    ends = np.asarray(off[1:], dtype=np.int64)
+    if (ends - starts < 11).any():
+        raise ValueError("truncated header")
     hdr = data[starts[:, None] + np.arange(11)]
     if not ((hdr[:, 0] == MAGIC[0]) & (hdr[:, 1] == MAGIC[1])).all():
         raise ValueError("bad magic")
     codes = hdr[:, 2]
+    bad = np.flatnonzero(~np.isin(codes, list(_FMT_NAME)))
+    if len(bad):
+        raise ValueError(f"unknown fmt code {int(codes[bad[0]])}")
     ws = np.ascontiguousarray(hdr[:, 3:7]).view("<u4").ravel().astype(np.int64)
     hs = np.ascontiguousarray(hdr[:, 7:11]).view("<u4").ravel().astype(np.int64)
     pixels: list = [None] * n
     fmts = [_FMT_NAME[int(c)] for c in codes]
     for i in np.flatnonzero(codes == FMT_RAW):
-        pixels[i] = data[starts[i] + 11: off[i + 1]].reshape(hs[i], ws[i])
+        pixels[i] = data[starts[i] + 11: ends[i]].reshape(hs[i], ws[i])
     for code in (FMT_RLE, FMT_QUANT):
         idxs = np.flatnonzero(codes == code)
         if not len(idxs):
             continue
+        body = ends[idxs] - starts[idxs] - 11
+        if (body % 2).any():
+            raise ValueError("RLE body of odd length")
         runs = np.concatenate(
-            [data[starts[i] + 11: off[i + 1]] for i in idxs]).reshape(-1, 2)
+            [data[starts[i] + 11: ends[i]] for i in idxs]).reshape(-1, 2)
+        # each image's run lengths must add up to exactly its h·w
+        npix = hs[idxs] * ws[idxs]
+        got = np.zeros(len(idxs), dtype=np.int64)
+        nz = body > 0               # reduceat cannot sum an empty segment
+        if nz.any():
+            first_run = np.cumsum(body // 2) - body // 2
+            got[nz] = np.add.reduceat(runs[:, 0], first_run[nz],
+                                      dtype=np.int64)
+        wrong = np.flatnonzero(got != npix)
+        if len(wrong):
+            i = idxs[wrong[0]]
+            raise ValueError(
+                f"image {i}: RLE body expands to {int(got[wrong[0]])} "
+                f"pixels, header says {int(hs[i])}x{int(ws[i])}")
         flat = np.repeat(runs[:, 1], runs[:, 0])
         if code == FMT_QUANT:
             flat = np.clip(np.round(flat.astype(np.float64) * _QSTEP),
                            0, 255).astype(np.uint8)
-        o = 0
-        for i in idxs:
-            npix = int(hs[i] * ws[i])
-            pixels[i] = flat[o:o + npix].reshape(hs[i], ws[i])
-            o += npix
-    bad = np.flatnonzero((codes != FMT_RAW) & (codes != FMT_RLE)
-                         & (codes != FMT_QUANT))
-    if len(bad):
-        raise ValueError(f"unknown fmt code {int(codes[bad[0]])}")
+        px_at = np.concatenate([[0], np.cumsum(npix)])
+        for k, i in enumerate(idxs):
+            pixels[i] = flat[px_at[k]:px_at[k + 1]].reshape(hs[i], ws[i])
     return pixels, fmts
 
 

@@ -29,26 +29,6 @@ def polygon_area(xs: np.ndarray, ys: np.ndarray) -> float:
     return 0.5 * abs(np.dot(x, np.roll(y, -1)) - np.dot(np.roll(x, -1), y))
 
 
-def polygon_area_m2(xs: np.ndarray, ys: np.ndarray) -> float:
-    """Approximate geodesic area: planar shoelace on a local equal-area
-    projection (lon scaled by cos(mean lat))."""
-    y = np.asarray(ys, dtype=np.float64)
-    coslat = np.cos(np.deg2rad(y.mean()))
-    mx = np.asarray(xs, dtype=np.float64) * coslat
-    deg_m = np.pi / 180.0 * EARTH_RADIUS_M
-    return polygon_area(mx, y) * deg_m * deg_m
-
-
-def bbox(xs: np.ndarray, ys: np.ndarray) -> np.ndarray:
-    return np.array([xs.min(), ys.min(), xs.max(), ys.max()], dtype=np.float64)
-
-
-def expand_bbox(b: np.ndarray, d: float) -> np.ndarray:
-    """Buffer-as-bbox-expand (reference analog: .buffer(d).bounds(),
-    src/01composite_s2.py:92-98)."""
-    return np.array([b[0] - d, b[1] - d, b[2] + d, b[3] + d], dtype=np.float64)
-
-
 def haversine_m(lon1, lat1, lon2, lat2) -> np.ndarray:
     """Great-circle distance in meters, vectorized."""
     p1, p2 = np.deg2rad(lat1), np.deg2rad(lat2)
@@ -249,41 +229,25 @@ class PolygonIndex:
         ).reshape(-1, 4)
         self.tree = STRtree(self.boxes)
 
-    def probe(self, px: np.ndarray, py: np.ndarray, first_match: bool = True):
+    def probe(self, px: np.ndarray, py: np.ndarray):
         """Vectorized per-polygon: candidates by bbox, exact by ray cast.
 
-        With `first_match` (the engine default, matching GEE's tiling
-        semantics where each pixel belongs to one stratum), the lowest
-        unit_id wins ties on shared borders — a fixed, documented
-        tie-break so join output is row-for-row deterministic.
+        Each point belongs to at most one unit (GEE's tiling semantics,
+        where each pixel belongs to one stratum): the lowest unit_id wins
+        ties on shared borders — a fixed, documented tie-break so join
+        output is row-for-row deterministic.
         Returns (point_indices, unit_ids).
         """
         px = np.asarray(px, dtype=np.float64)
         py = np.asarray(py, dtype=np.float64)
-        npts = len(px)
-        order = np.argsort(self.unit_ids, kind="stable")
-        if first_match:
-            assigned = np.full(npts, -1, dtype=np.int64)
-            for k in order:
-                b = self.boxes[k]
-                cand = (assigned < 0) & (px >= b[0]) & (px <= b[2]) & (py >= b[1]) & (py <= b[3])
-                ci = np.flatnonzero(cand)
-                if len(ci) == 0:
-                    continue
-                hit = points_in_polygon(px[ci], py[ci], self.rings_x[k], self.rings_y[k])
-                assigned[ci[hit]] = self.unit_ids[k]
-            pi = np.flatnonzero(assigned >= 0)
-            return pi, assigned[pi]
-        pts, units = [], []
-        for k in order:
+        assigned = np.full(len(px), -1, dtype=np.int64)
+        for k in np.argsort(self.unit_ids, kind="stable"):
             b = self.boxes[k]
-            cand = (px >= b[0]) & (px <= b[2]) & (py >= b[1]) & (py <= b[3])
+            cand = (assigned < 0) & (px >= b[0]) & (px <= b[2]) & (py >= b[1]) & (py <= b[3])
             ci = np.flatnonzero(cand)
             if len(ci) == 0:
                 continue
             hit = points_in_polygon(px[ci], py[ci], self.rings_x[k], self.rings_y[k])
-            pts.append(ci[hit])
-            units.append(np.full(int(hit.sum()), self.unit_ids[k], dtype=np.int64))
-        if not pts:
-            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-        return np.concatenate(pts), np.concatenate(units)
+            assigned[ci[hit]] = self.unit_ids[k]
+        pi = np.flatnonzero(assigned >= 0)
+        return pi, assigned[pi]

@@ -249,11 +249,3 @@ def percentile_harmonic_composite(df: DataFrame, group_col: str,
         return out
 
     return g.mapInPandas(lambda it: (solve(p) for p in it if len(p)), out_schema)
-
-
-def fractional_year(ts_col="ts", epoch_year: int = 2024) -> F.Column:
-    """Time band: fractional years since epoch (reference:
-    src/utils/harmonics.py:63-77 'difference(epoch, year)'). `ts_col` is a
-    timestamp column name or Column."""
-    epoch = F.lit(f"{epoch_year}-01-01 00:00:00").cast("timestamp")
-    return (F.unix_timestamp(ts_col) - F.unix_timestamp(epoch)) / F.lit(86400.0 * 365.25)

@@ -13,11 +13,13 @@ Physical strategy (BASELINE.json::north_star):
    prefilter predicate. At 100 TB this is what turns a full-table scan into
    a scan of only the AOI's partitions.
 2. **Narrow map, no shuffle** — build a PolygonIndex (STR R-tree over
-   ring bboxes) once on the driver, broadcast it, probe it with vectorized
-   point batches inside ``mapInPandas``. Containment assignment therefore
-   costs ZERO shuffles: it is a map-side broadcast join, the same shape
-   Catalyst picks for small dimension tables, but with an R-tree instead
-   of a hash table. Skewed cells (borders/rivers) cannot hurt a narrow
+   ring bboxes) once on the driver, broadcast it, and probe it with
+   vectorized point batches in ONE ``mapInArrow`` kernel
+   (``_assign_kernel``) that every containment join shares: footprint →
+   fine cell → coarse-cover prefilter → PIP. Containment assignment
+   therefore costs ZERO shuffles: it is a map-side broadcast join, the
+   same shape Catalyst picks for small dimension tables, but with an
+   R-tree instead of a hash table. Skewed cells (borders/rivers) cannot hurt a narrow
    map — skew handling matters only for the *keyed* operators downstream
    (distance join / kNN), which salt explicitly.
 3. **Exact PIP** — even-odd ray casting (kernels.geom.points_in_polygon),
@@ -37,7 +39,7 @@ from pyspark.sql.types import (
     DoubleType, LongType, StructField, StructType,
 )
 
-from ..kernels import geom, grid
+from ..kernels import codec, geom, grid
 from .. import datagen
 
 #: coarse grid level used as prefilter/shuffle key. Level 10 cells are
@@ -45,47 +47,35 @@ from .. import datagen
 COARSE_LEVEL = 10
 #: fine level for per-image cell ids (~2.7 km at l=14 over lat band).
 FINE_LEVEL = 14
+#: columns the tile-assignment kernel derives, in its output order
+_DERIVED = [StructField("lon", DoubleType()), StructField("lat", DoubleType()),
+            StructField("cell_id", LongType()), StructField("unit_id", LongType())]
 
 
 # ----------------------------------------------------------- footprint & cell
 
-def image_index_col(df: DataFrame, id_col: str = "image_id") -> DataFrame:
-    """Parse the numeric index out of ``img_%012d`` ids — JVM-side only."""
-    return df.withColumn("img_idx", F.substring(F.col(id_col), 5, 12).cast("long"))
-
-
-def parse_image_idx(ids: pd.Series) -> np.ndarray:
-    """Vectorized ``img_%012d`` → int64: fixed-width byte view + digit dot
-    product (~100 ns/row vs ~2 µs/row for pandas .str parsing — the id
-    parse is on the flagship hot path at 10⁶+ rows/batch)."""
-    a = np.asarray(ids, dtype="S16")
-    if a.dtype.itemsize != 16:          # unexpected id shape → slow path
-        return ids.str.slice(4).astype(np.int64).to_numpy()
-    b = np.frombuffer(a.tobytes(), dtype=np.uint8).reshape(len(a), 16)
-    digits = (b[:, 4:16] - ord("0")).astype(np.int64)
-    powers = (10 ** np.arange(11, -1, -1)).astype(np.int64)
-    return digits @ powers
+_DIGIT_POWERS = 10 ** np.arange(11, -1, -1, dtype=np.int64)
 
 
 def _parse_arrow_ids(arr) -> np.ndarray:
     """``img_%012d`` Arrow string column → int64 indices with zero
     Python-object materialization: all ids are fixed 16-byte strings, so
     the Arrow offsets are uniform and the data buffer views directly as
-    an (n, 16) uint8 matrix for the digit dot product. Ragged or
-    unexpected inputs fall back to the object path (parse_image_idx —
-    identical values)."""
-    a = arr.combine_chunks() if hasattr(arr, "combine_chunks") else arr
-    bufs = a.buffers()
-    if a.null_count == 0 and len(bufs) == 3 and bufs[2] is not None:
-        off = np.frombuffer(bufs[1], dtype=np.int32)[
-            a.offset: a.offset + len(a) + 1].astype(np.int64)
+    an (n, 16) uint8 matrix for the digit dot product. Any other input
+    (ragged, ``large_string``, a non-digit character) is parsed by Arrow
+    compute instead, which gives the same values and raises
+    ``ArrowInvalid`` on a malformed id."""
+    views = codec.arrow_views(arr)
+    if views is not None:
+        data, off = views
         if len(off) > 1 and (np.diff(off) == 16).all():
-            data = np.frombuffer(bufs[2], dtype=np.uint8)
-            view = data[off[0]:off[-1]].reshape(-1, 16)
-            digits = (view[:, 4:16] - ord("0")).astype(np.int64)
-            powers = (10 ** np.arange(11, -1, -1)).astype(np.int64)
-            return digits @ powers
-    return parse_image_idx(pd.Series(a.to_pylist()))
+            digits = data[off[0]:off[-1]].reshape(-1, 16)[:, 4:] - ord("0")
+            if digits.max() <= 9:       # uint8: a byte below '0' wraps high
+                return digits.astype(np.int64) @ _DIGIT_POWERS
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    return pc.cast(pc.utf8_slice_codeunits(arr, 4), pa.int64()).to_numpy()
 
 
 def with_footprint(df: DataFrame, id_col: str = "image_id") -> DataFrame:
@@ -118,9 +108,9 @@ _SPREAD_MASKS = (0x0000FFFF0000FFFF, 0x00FF00FF00FF00FF, 0x0F0F0F0F0F0F0F0F,
 _SPREAD_SHIFTS = (16, 8, 4, 2, 1)
 
 
-def attach_cell(df: DataFrame, level: int,
-                lon_col: str = "lon", lat_col: str = "lat",
-                out_col: str = "cell_id") -> DataFrame:
+def with_cell(df: DataFrame, level: int = FINE_LEVEL,
+              lon_col: str = "lon", lat_col: str = "lat",
+              out_col: str = "cell_id") -> DataFrame:
     """Attach the Morton cell id at `level` as pure JVM column algebra —
     bit-identical to kernels.grid.encode (same quantize → clip → magic
     interleave arithmetic, all exact IEEE ops: add/div/mul/floor; the
@@ -158,13 +148,6 @@ def attach_cell(df: DataFrame, level: int,
     return (df.withColumn(out_col,
                           F.shiftleft(morton, 5).bitwiseOR(F.lit(level)))
             .drop(ax, ay))
-
-
-def with_cell(df: DataFrame, level: int = FINE_LEVEL,
-              lon_col: str = "lon", lat_col: str = "lat",
-              out_col: str = "cell_id") -> DataFrame:
-    """Attach the Morton cell id at `level` (JVM column algebra)."""
-    return attach_cell(df, level, lon_col, lat_col, out_col)
 
 
 # --------------------------------------------------------------- poly loading
@@ -205,49 +188,83 @@ def polygon_cover_cells(index: geom.PolygonIndex, level: int = COARSE_LEVEL) -> 
 
 # ---------------------------------------------------------------- tile assign
 
+def _assign_kernel(spark: SparkSession, index: geom.PolygonIndex,
+                   out_names: list[str] | None = None):
+    """The one tile-assignment kernel behind :func:`assign_tiles`,
+    :func:`assign_images_fused` and :func:`zonal_counts_fused`: a
+    ``mapInArrow`` function that runs footprint → fine cell → coarse-cover
+    prefilter → exact R-tree PIP over each Arrow batch.
+
+    The index and its coarse cover are broadcast once. The input shape
+    is read from the batch itself:
+
+    * ``lon``/``lat`` columns are used when present; otherwise the
+      footprint is derived from the image id in column 0;
+    * an int64 id column was parsed in the JVM; a string id column is
+      parsed zero-copy (:func:`_parse_arrow_ids`).
+
+    With ``out_names`` the kernel re-emits the kept input rows (Arrow
+    ``take``) followed by the derived lon/lat (when not input columns),
+    ``cell_id`` and ``unit_id``. Without, it emits one ``(unit_id, n)``
+    partial count per unit per task: a manual map-side combine whose
+    output is ≤ |polygons| rows."""
+    bidx = spark.sparkContext.broadcast(index)
+    bcov = spark.sparkContext.broadcast(polygon_cover_cells(index, COARSE_LEVEL))
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        ix, cov = bidx.value, bcov.value
+        counts: dict[int, int] = {}
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            has_xy = "lon" in rb.schema.names
+            if has_xy:
+                lon = rb.column("lon").to_numpy(zero_copy_only=False)
+                lat = rb.column("lat").to_numpy(zero_copy_only=False)
+            else:
+                ids = rb.column(0)
+                lon, lat = datagen.footprint_from_ids(
+                    ids.to_numpy() if pa.types.is_integer(ids.type)
+                    else _parse_arrow_ids(ids))
+            cell = grid.encode(lon, lat, FINE_LEVEL)
+            keep = np.flatnonzero(np.isin(grid.parent(cell, COARSE_LEVEL), cov))
+            pi, units = ix.probe(lon[keep], lat[keep])
+            if out_names is None:
+                for u, n in zip(*np.unique(units, return_counts=True)):
+                    counts[int(u)] = counts.get(int(u), 0) + int(n)
+                continue
+            rows = keep[pi]
+            sel = pa.array(rows)
+            arrays = [rb.column(i).take(sel) for i in range(rb.num_columns)]
+            if not has_xy:
+                arrays += [pa.array(lon[rows]), pa.array(lat[rows])]
+            arrays += [pa.array(cell[rows]), pa.array(units)]
+            yield pa.RecordBatch.from_arrays(arrays, out_names)
+        if counts:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(list(counts), type=pa.int64()),
+                 pa.array(list(counts.values()), type=pa.int64())],
+                ["unit_id", "n"])
+
+    return kernel
+
+
 def assign_tiles(spark: SparkSession, points_df: DataFrame,
                  index: geom.PolygonIndex,
-                 lon_col: str = "lon", lat_col: str = "lat",
-                 keep_cols: tuple[str, ...] = ("image_id",),
-                 prefilter: bool = True,
-                 first_match: bool = True) -> DataFrame:
-    """Point/footprint → polygon containment join (the flagship operator).
+                 keep_cols: tuple[str, ...] = ("image_id",)) -> DataFrame:
+    """Point → polygon containment join over ``lon``/``lat`` columns.
 
     Returns keep_cols + (lon, lat, cell_id, unit_id); rows not inside any
     polygon are dropped (inner-join semantics, matching ``sampleRegions``
-    dropping points off the raster/region).
+    dropping points off the raster/region). One ``mapInArrow`` pass of
+    the shared kernel (:func:`_assign_kernel`).
     """
-    bidx = spark.sparkContext.broadcast(index)
-
-    df = with_cell(points_df, FINE_LEVEL, lon_col, lat_col)
-    if prefilter:
-        cover = polygon_cover_cells(index, COARSE_LEVEL)
-        bset = spark.sparkContext.broadcast(np.sort(cover))
-
-        @F.pandas_udf("boolean")
-        def in_cover(cell: pd.Series) -> pd.Series:
-            coarse = grid.parent(cell.to_numpy(), COARSE_LEVEL)
-            return pd.Series(np.isin(coarse, bset.value, assume_unique=False))
-
-        df = df.where(in_cover(F.col("cell_id")))
-
-    cols = list(keep_cols) + [lon_col, lat_col, "cell_id"]
-    fields = [df.schema[c] for c in cols]
-    out_schema = StructType(fields + [StructField("unit_id", LongType())])
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx_local = bidx.value
-        for b in batches:
-            if len(b) == 0:
-                continue
-            pi, units = idx_local.probe(
-                b[lon_col].to_numpy(), b[lat_col].to_numpy(), first_match=first_match
-            )
-            out = b.iloc[pi].reset_index(drop=True)
-            out["unit_id"] = units
-            yield out
-
-    return df.select(*cols).mapInPandas(probe, out_schema)
+    cols = [*keep_cols, "lon", "lat"]
+    out_schema = StructType([points_df.schema[c] for c in cols] + _DERIVED[2:])
+    return points_df.select(*cols).mapInArrow(
+        _assign_kernel(spark, index, out_schema.names), out_schema)
 
 
 def assign_tiles_codegen(points_df: DataFrame, index: geom.PolygonIndex,
@@ -258,8 +275,9 @@ def assign_tiles_codegen(points_df: DataFrame, index: geom.PolygonIndex,
     — the whole join runs inside whole-stage codegen, zero Python, zero
     broadcast objects. Pick this when the polygon set is small (~≤100
     convex rings; expression size grows linearly); fall back to the
-    broadcast R-tree mapInPandas probe otherwise. Tie-break identical to
-    PolygonIndex.probe (lowest unit_id wins; tested equivalent).
+    broadcast R-tree ``mapInArrow`` kernel (assign_tiles) otherwise.
+    Tie-break identical to PolygonIndex.probe (lowest unit_id wins;
+    tested equivalent).
 
     Measured (32-core VM, 5M rows, 12 polygons): codegen 1.27M rows/s vs
     R-tree probe 1.47M rows/s — the Arrow-batched numpy probe already
@@ -300,124 +318,51 @@ def assign_tiles_codegen(points_df: DataFrame, index: geom.PolygonIndex,
 
 
 def assign_images_fused(spark: SparkSession, images_df: DataFrame,
-                        index: geom.PolygonIndex,
-                        id_col: str = "image_id",
-                        extra_cols: tuple[str, ...] = (),
-                        prefilter: bool = True,
-                        fine_level: int = FINE_LEVEL) -> DataFrame:
-    """Single-pass flagship join: footprint derivation + cell encode +
-    coarse-cover prefilter + exact R-tree PIP in ONE mapInArrow kernel —
-    one Arrow round-trip instead of four chained Python stages, and no
-    pandas object materialization on either side of the boundary (the
-    fixed-width ids parse zero-copy from the Arrow data buffer; kept
-    rows are re-emitted with Arrow ``take``). This is the physical plan
-    the 100 TB path wants: a narrow map over the scan with zero
-    shuffles; per-batch numpy cost is ~1 ms / 4k rows, so the pipeline
-    is I/O-bound, exactly as it should be.
+                        index: geom.PolygonIndex) -> DataFrame:
+    """Single-pass flagship join over contract-shaped images: footprint
+    derivation + cell encode + coarse-cover prefilter + exact R-tree PIP
+    in ONE ``mapInArrow`` pass of the shared kernel
+    (:func:`_assign_kernel`). No pandas object materialization on either
+    side of the boundary: the fixed-width ids parse zero-copy from the
+    Arrow data buffer, and kept rows are re-emitted with Arrow ``take``.
+    This is the physical plan the 100 TB path wants: a narrow map over
+    the scan with zero shuffles; per-batch numpy cost is ~1 ms / 4k
+    rows, so the pipeline is I/O-bound, exactly as it should be.
+
+    Returns (image_id, lon, lat, cell_id, unit_id).
     """
-    bidx = spark.sparkContext.broadcast(index)
-    cover = polygon_cover_cells(index, COARSE_LEVEL) if prefilter else None
-    bcov = spark.sparkContext.broadcast(np.sort(cover)) if prefilter else None
-
-    cols = [id_col, *extra_cols]
-    fields = [images_df.schema[c] for c in cols]
-    out_schema = StructType(fields + [
-        StructField("lon", DoubleType()), StructField("lat", DoubleType()),
-        StructField("cell_id", LongType()), StructField("unit_id", LongType()),
-    ])
-    out_names = [f.name for f in out_schema.fields]
-
-    def kernel(batches):
-        import pyarrow as pa
-
-        ix = bidx.value
-        cov = bcov.value if bcov is not None else None
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            lon, lat = datagen.footprint_from_ids(
-                _parse_arrow_ids(rb.column(0)))
-            cell = grid.encode(lon, lat, fine_level)
-            keep = np.arange(rb.num_rows)
-            if cov is not None:
-                m = np.isin(grid.parent(cell, COARSE_LEVEL), cov)
-                keep = keep[m]
-                lon, lat, cell = lon[m], lat[m], cell[m]
-            pi, units = ix.probe(lon, lat)
-            sel = pa.array(keep[pi].astype(np.int64))
-            arrays = [rb.column(i).take(sel) for i in range(rb.num_columns)]
-            arrays += [pa.array(lon[pi]), pa.array(lat[pi]),
-                       pa.array(cell[pi]), pa.array(units)]
-            yield pa.RecordBatch.from_arrays(arrays, out_names)
-
-    return images_df.select(*cols).mapInArrow(kernel, out_schema)
+    out_schema = StructType([images_df.schema["image_id"], *_DERIVED])
+    return images_df.select("image_id").mapInArrow(
+        _assign_kernel(spark, index, out_schema.names), out_schema)
 
 
 def zonal_counts_fused(spark: SparkSession, images_df: DataFrame,
-                       index: geom.PolygonIndex,
-                       id_col: str = "image_id",
-                       prefilter: bool = True,
-                       fine_level: int = FINE_LEVEL) -> DataFrame:
-    """Flagship zonal aggregation with MANUAL map-side combine: the fused
-    kernel emits per-batch partial (unit_id, n) aggregates (≤ |polygons|
-    rows per batch instead of per-row output through Arrow), and a tiny
-    final groupBy sums the partials. At 10¹² rows this is the difference
-    between shuffling 10¹² rows and shuffling |batches|·|units| rows.
+                       index: geom.PolygonIndex) -> DataFrame:
+    """Flagship zonal aggregation with MANUAL map-side combine: the
+    shared kernel emits per-task partial (unit_id, n) aggregates
+    (≤ |polygons| rows per task instead of per-row output through
+    Arrow), and a tiny final groupBy sums the partials. At 10¹² rows this
+    is the difference between shuffling 10¹² rows and shuffling
+    |tasks|·|units| rows.
 
     Two r6 boundary optimizations (the kernel's numpy work is ~0.1 s of
     a 2.5 s query; the JVM→Python Arrow boundary is the cost):
     * the id string is parsed to its int64 index IN THE JVM
       (substring+cast, codegen) so 8-byte ints cross the boundary
       instead of 16-byte strings (measured −0.35 s / 5M rows; malformed
-      ids now raise Spark's ANSI cast error instead of taking the
-      Python fallback parse — the input contract guarantees the shape);
+      ids raise Spark's ANSI cast error);
     * the kernel stage coalesces to one task per core: per-task Python
       round-trip overhead dominates a map whose output is ≤|units| rows,
       so 96 input partitions × ~200 ms beats 32 × the same (measured
       −0.6 s). coalesce never shuffles and never increases partitions."""
-    bidx = spark.sparkContext.broadcast(index)
-    cover = polygon_cover_cells(index, COARSE_LEVEL) if prefilter else None
-    bcov = spark.sparkContext.broadcast(np.sort(cover)) if prefilter else None
-
-    out_schema = StructType([
-        StructField("unit_id", LongType()), StructField("n", LongType()),
-    ])
-
-    def kernel(batches):
-        # mapInArrow, not mapInPandas: converting 10⁶+ ids into pandas
-        # objects costs more than every numpy stage of the kernel
-        # combined; the int64 column views as numpy zero-copy.
-        import pyarrow as pa
-
-        ix = bidx.value
-        cov = bcov.value if bcov is not None else None
-        acc: dict[int, int] = {}
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            pidx = rb.column(0).to_numpy(zero_copy_only=False)
-            lon, lat = datagen.footprint_from_ids(pidx)
-            if cov is not None:
-                m = np.isin(grid.parent(grid.encode(lon, lat, fine_level),
-                                        COARSE_LEVEL), cov)
-                lon, lat = lon[m], lat[m]
-            _, units = ix.probe(lon, lat)
-            u, c = np.unique(units, return_counts=True)
-            for uu, cc in zip(u, c):
-                acc[int(uu)] = acc.get(int(uu), 0) + int(cc)
-        if acc:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(list(acc), type=pa.int64()),
-                 pa.array([int(v) for v in acc.values()], type=pa.int64())],
-                ["unit_id", "n"])
-
     # unconditional: coalesce never increases the partition count, and
     # probing src.rdd.getNumPartitions() first costs a full extra
     # physical-planning pass per invocation
     src = images_df.select(
-        F.substring(F.col(id_col), 5, 12).cast("long").alias("_idx")) \
+        F.substring(F.col("image_id"), 5, 12).cast("long").alias("_idx")) \
         .coalesce(spark.sparkContext.defaultParallelism)
-    partials = src.mapInArrow(kernel, out_schema)
+    partials = src.mapInArrow(_assign_kernel(spark, index), StructType([
+        StructField("unit_id", LongType()), StructField("n", LongType())]))
     return partials.groupBy("unit_id").agg(F.sum("n").alias("n"))
 
 
@@ -462,7 +407,7 @@ def distance_join(points_df: DataFrame, radius_deg: float,
     lvl = cell_level
 
     # NOTE: this encode stays a pandas UDF deliberately (r6): the JVM
-    # morton algebra (attach_cell) was measured SLOWER here (0.69 s ->
+    # morton algebra (with_cell) was measured SLOWER here (0.69 s ->
     # 1.1 s at sf0.1) — the inner join's inferred isnotnull(cell) filter
     # gets pushed through the projections and re-inlines the whole
     # spread chain over the derived lon/lat into a ~16 KB per-row filter
@@ -624,7 +569,7 @@ def thin_points(points_df: DataFrame, radius_deg: float,
     lvl = cell_level
 
     # NOTE: this encode stays a pandas UDF deliberately (r6): the JVM
-    # morton algebra (attach_cell) was measured SLOWER here (0.69 s ->
+    # morton algebra (with_cell) was measured SLOWER here (0.69 s ->
     # 1.1 s at sf0.1) — the inner join's inferred isnotnull(cell) filter
     # gets pushed through the projections and re-inlines the whole
     # spread chain over the derived lon/lat into a ~16 KB per-row filter

@@ -20,13 +20,6 @@ from __future__ import annotations
 M31 = 2147483647
 
 
-def lehmer(key: str, mult: int = 48271) -> str:
-    """Affine congruential step — fine for decorrelating *distant* keys
-    (point derivation below), NOT for thresholds over sequential ids
-    (use detrand_sql, which adds a quadratic mix)."""
-    return f"(({key}) * {mult}) % {M31}"
-
-
 def detrand_sql(key: str, mult: int = 48271, mult2: int = 69621) -> str:
     """Deterministic int in [0, 2^31-1): quadratic congruential mix,
     bit-identical to functions.detrand_int (see its docstring)."""
@@ -55,11 +48,6 @@ def lat_sql(key: str) -> str:
     """Deterministic lat in the KAZA bbox [-20.5, -13.5]."""
     return (f"CAST(-20.5 AS DOUBLE) + ((({key}) * 69621) % {M31} % 7001)"
             f" / CAST(7001.0 AS DOUBLE) * CAST(7.0 AS DOUBLE)")
-
-
-def rand_unit_sql(key: str, mult: int = 48271) -> str:
-    """Deterministic 'random' in [0, 1) — the randomColumn(seed) analog."""
-    return f"((({key}) * {mult}) % {M31}) / 2147483647.0"
 
 
 def points_from_orders_sql(limit_mod: int | None = None) -> str:

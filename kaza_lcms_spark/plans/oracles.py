@@ -138,18 +138,3 @@ def round_sql(x: str, digits: int = 4) -> str:
 def round4_sql(x: str) -> str:
     """4-decimal :func:`round_sql` — the cosine family's contract."""
     return round_sql(x, 4)
-
-
-def sanity_check_quads() -> None:
-    """Assert generated quads are convex+CCW and the CASE semantics match
-    the numpy kernel on a probe grid (used by tests)."""
-    from ..kernels import geom
-    quads = aoi_quads()
-    for uid, xs, ys in quads:
-        n = len(xs)
-        for i in range(n):
-            x1, y1 = xs[i], ys[i]
-            x2, y2 = xs[(i + 1) % n], ys[(i + 1) % n]
-            x3, y3 = xs[(i + 2) % n], ys[(i + 2) % n]
-            cr = (x2 - x1) * (y3 - y1) - (y2 - y1) * (x3 - x1)
-            assert cr > 0, f"unit {uid} not strictly convex/CCW"

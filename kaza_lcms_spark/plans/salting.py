@@ -33,16 +33,6 @@ def cell_histogram(df: DataFrame, cell_col: str = "cell_id") -> DataFrame:
     return df.groupBy(cell_col).agg(F.count(F.lit(1)).alias("n"))
 
 
-def hot_cells(df: DataFrame, threshold: int,
-              cell_col: str = "cell_id") -> list[int]:
-    """Driver-side decision: the salting plan comes from a sampled/true
-    histogram (SURVEY.md §4 'salting decisions from sampled cell
-    histograms')."""
-    rows = (cell_histogram(df, cell_col)
-            .where(F.col("n") > threshold).select(cell_col).collect())
-    return [r[0] for r in rows]
-
-
 def with_salt(df: DataFrame, key_col: str, buckets: int,
               out_col: str = "salt") -> DataFrame:
     """Deterministic salt bucket from a stable row key (never rand())."""

@@ -6,12 +6,12 @@ Re-grounds the reference's export surface:
   /root/reference/src/00sample_pts.py:208) → projected CSV write.
 * Metrics sinks — per-class variable importance CSV + OOB txt
   (/root/reference/src/utils/primitives.py:18-30) → a metrics DataFrame
-  written as CSV plus run-metrics rows into the lineage catalog.
+  through ``export_csv`` plus run-metrics rows into the lineage catalog.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def export_csv(df: DataFrame, path: str, selectors: list[str] | None = None,
@@ -23,11 +23,3 @@ def export_csv(df: DataFrame, path: str, selectors: list[str] | None = None,
     if coalesce:
         out = out.coalesce(coalesce)
     out.write.mode("overwrite").option("header", str(header).lower()).csv(path)
-
-
-def export_metrics(spark: SparkSession, metrics: dict, path: str) -> None:
-    """Flat metrics dict → one-row CSV (S13; reference writes varimp CSV +
-    OOB txt per class, src/utils/primitives.py:18-30)."""
-    df = spark.createDataFrame([tuple(metrics.values())],
-                               list(metrics.keys()))
-    export_csv(df, path)

@@ -17,20 +17,12 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, IntegerType, LongType, StringType,
                                StructField, StructType)
 
 from ..kernels import codec
-
-
-def read_images(spark: SparkSession, path: str,
-                columns: list[str] | None = None) -> DataFrame:
-    """Scan the images table; project early so parquet reads only the
-    needed columns (binary `bytes` column is the expensive one)."""
-    df = spark.read.parquet(path)
-    return df.select(*columns) if columns else df
 
 
 DECODE_STATS_SCHEMA = StructType([
@@ -52,8 +44,9 @@ def decode_stats(df: DataFrame) -> DataFrame:
     mapInArrow: the binary payloads decode from zero-copy views of the
     Arrow data buffer (codec.decode_batch_views) — no per-image Python
     bytes objects, no pandas materialization; the passthrough columns
-    are re-emitted 1:1. Nullable/chunk-odd batches fall back to the
-    object path (codec.decode_batch, bit-identical)."""
+    are re-emitted 1:1. Batches without int32-offset views (nulls,
+    ``large_binary``) fall back to the object path (codec.decode_batch,
+    bit-identical)."""
 
     def run(batches):
         import pyarrow as pa
@@ -63,15 +56,11 @@ def decode_stats(df: DataFrame) -> DataFrame:
             if n == 0:
                 continue
             byts = rb.column(1)
-            bufs = byts.buffers()
-            if byts.null_count == 0 and len(bufs) == 3 and bufs[2] is not None:
-                off = np.frombuffer(bufs[1], dtype=np.int32)[
-                    byts.offset: byts.offset + n + 1].astype(np.int64)
-                data = np.frombuffer(bufs[2], dtype=np.uint8)
-                pixels, _ = codec.decode_batch_views(data, off)
+            views = codec.arrow_views(byts)
+            if views is not None:
+                pixels, _ = codec.decode_batch_views(*views)
             else:
-                pixels, _ = codec.decode_batch(
-                    [bytes(x) for x in byts.to_pylist()])
+                pixels, _ = codec.decode_batch(byts.to_pylist())
             means = np.empty(n); stds = np.empty(n)
             ph = np.empty(n, dtype=np.int64)
             # group same-shaped images into stacks: stats + phash vectorize;

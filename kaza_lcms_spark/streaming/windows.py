@@ -95,7 +95,7 @@ def stream_tile_counts(spark: SparkSession, stream_images: DataFrame,
                        index: geom.PolygonIndex) -> DataFrame:
     """Stream-static spatial join: the SAME fused footprint→cell→PIP kernel
     used in batch (operators/spatial_join.assign_images_fused) applied to a
-    streaming image feed, aggregated to per-unit counts. mapInPandas is a
+    streaming image feed, aggregated to per-unit counts. mapInArrow is a
     stateless narrow transform, so it is streaming-legal; the groupBy is a
     streaming aggregation (complete/update mode)."""
     assigned = SJ.assign_images_fused(spark, stream_images, index)

@@ -1,5 +1,7 @@
 """Unit tests for the pure-numpy kernel layer (no Spark) — SURVEY.md §5.1."""
 
+import struct
+
 import numpy as np
 import pytest
 
@@ -229,6 +231,46 @@ def test_quant_psnr_at_least_40db():
         assert f == "quant"
         assert codec.psnr(img, out) >= 40.0
         assert np.abs(out.astype(int) - img.astype(int)).max() <= 2
+
+
+def _mixed_batch():
+    """64 images, 11 of them RLE, in all three formats."""
+    rng = np.random.default_rng(16)
+    fmts = ["rle" if i % 6 == 1 else ("quant" if i % 6 == 2 else "raw")
+            for i in range(63)] + ["raw"]
+    return [codec.encode(_mk_img(rng, 8 + i % 5, 6 + i % 3,
+                                 smooth=bool(i % 2)), f)
+            for i, f in enumerate(fmts)]
+
+
+def _decode_views(blobs):
+    off = np.zeros(len(blobs) + 1, dtype=np.int64)
+    np.cumsum([len(b) for b in blobs], out=off[1:])
+    return codec.decode_batch_views(
+        np.frombuffer(b"".join(blobs), dtype=np.uint8), off)
+
+
+_BATCH_DECODERS = {"decode_batch": codec.decode_batch,
+                   "decode_batch_views": _decode_views}
+
+
+@pytest.mark.parametrize("entry", sorted(_BATCH_DECODERS))
+@pytest.mark.parametrize("bad", ["overlong", "truncated", "odd", "header"])
+def test_batch_decode_rejects_malformed_body(entry, bad):
+    """A body whose runs do not expand to exactly h·w must raise, as the
+    scalar decode does — never shift pixels into the later images of
+    its format group."""
+    blobs = _mixed_batch()
+    assert sum(b[2] == codec.FMT_RLE for b in blobs) == 11
+    i = next(k for k, b in enumerate(blobs) if b[2] == codec.FMT_RLE)
+    blobs[i] = {"overlong": blobs[i] + bytes([3, 7]),
+                "truncated": blobs[i][:-2],
+                "odd": blobs[i][:-1],
+                "header": blobs[i][:9]}[bad]
+    with pytest.raises((ValueError, struct.error)):
+        codec.decode(blobs[i])
+    with pytest.raises(ValueError):
+        _BATCH_DECODERS[entry](blobs)
 
 
 def test_phash_properties():

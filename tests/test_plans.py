@@ -3,6 +3,9 @@ visible in `.explain` output — column pruning to the scan, a shuffle-free
 flagship, broadcast extraction joins, partial aggregation.
 """
 
+import re
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -24,6 +27,35 @@ def test_flagship_has_no_shuffle(spark, fixture_dir):
     idx = SJ.load_polygon_index_from_fixture()
     plan = plan_of(SJ.assign_images_fused(spark, imgs, idx))
     assert "Exchange" not in plan, plan
+
+
+_PYTHON_NODE = re.compile(
+    r"^[\s+\-:]*(?:\*\(\d+\) )?(\w*(?:Python|InPandas|InArrow)\w*)")
+
+
+def python_nodes(df) -> list[str]:
+    """Names of the Python-evaluation nodes in the (pre-AQE) physical
+    plan: pandas/Arrow UDF projections and map/group kernels."""
+    return [m.group(1) for ln in plan_of(df).splitlines()
+            if (m := _PYTHON_NODE.match(ln))]
+
+
+def test_tile_assignment_is_one_arrow_kernel(spark):
+    """Every containment join crosses into Python exactly once: the
+    shared mapInArrow kernel, with no pandas-UDF prefilter before it."""
+    import __spark_entry__ as E
+    from kaza_lcms_spark import datagen
+    from tests.test_oracle_parity import SF_DIR
+
+    idx = SJ.load_polygon_index_from_fixture()
+    lon, lat = datagen.footprint_from_ids(np.arange(64, dtype=np.int64))
+    pts = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))],
+        "pt_id long, lon double, lat double")
+    assert python_nodes(SJ.assign_tiles(spark, pts, idx,
+                                        keep_cols=("pt_id",))) == ["MapInArrow"]
+    zonal = E.queries()["tile_zonal"](spark, SF_DIR)
+    assert python_nodes(zonal) == ["MapInArrow"]
 
 
 def test_flagship_scan_prunes_columns(spark, fixture_dir):

@@ -45,16 +45,6 @@ def test_zonal_counts(assigned, poly_index, truth_lonlat):
     assert {r["unit_id"]: r["n"] for r in rows} == dict(truth)
 
 
-def test_prefilter_equals_noprefilter(spark, fixture_dir, poly_index):
-    imgs = spark.read.parquet(fixture_dir + "/images.parquet").limit(500)
-    pts = sj.with_footprint(imgs)
-    a = sj.assign_tiles(spark, pts, poly_index, prefilter=True)
-    b = sj.assign_tiles(spark, pts, poly_index, prefilter=False)
-    ga = sorted((r["image_id"], r["unit_id"]) for r in a.collect())
-    gb = sorted((r["image_id"], r["unit_id"]) for r in b.collect())
-    assert ga == gb
-
-
 def test_distance_join_vs_bruteforce(spark, truth_lonlat):
     n = 400
     lon, lat = truth_lonlat
@@ -156,6 +146,40 @@ def test_fused_equals_staged(spark, fixture_dir, poly_index):
     assert a == b
 
 
+def test_large_var_types_take_the_object_path(spark, fixture_dir, poly_index):
+    """With 64-bit Arrow offsets (large_binary/large_string batches) the
+    zero-copy views do not apply; decode_stats and the fused assignment
+    must take their object paths and give the same output."""
+    from kaza_lcms_spark.sources import images as IMG
+    imgs = spark.read.parquet(fixture_dir + "/images.parquet")
+
+    def run():
+        return (sorted(tuple(r) for r in IMG.decode_stats(imgs).collect()),
+                sorted(tuple(r) for r in
+                       sj.assign_images_fused(spark, imgs, poly_index).collect()))
+
+    want = run()
+    key = "spark.sql.execution.arrow.useLargeVarTypes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        got = run()
+    finally:
+        spark.conf.set(key, old)
+    assert got == want and len(want[0]) == N_IMAGES
+
+
+def test_parse_arrow_ids_fast_and_object_paths_agree():
+    import pyarrow as pa
+    ids = [f"img_{i:012d}" for i in (0, 7, 123456789012, 999999999999)]
+    want = np.array([0, 7, 123456789012, 999999999999])
+    for arr in (pa.array(ids), pa.array(ids, pa.large_string()),
+                pa.array(["x"] + ids).slice(1)):
+        np.testing.assert_array_equal(sj._parse_arrow_ids(arr), want)
+    with pytest.raises(pa.ArrowInvalid):
+        sj._parse_arrow_ids(pa.array(ids[:2] + ["img_00000000001x"]))
+
+
 def test_thinning_exact_matches_sequential_greedy(spark, truth_lonlat):
     n = 400
     lon, lat = truth_lonlat
@@ -224,8 +248,7 @@ def test_assign_tiles_concave_polygons(spark):
         [(int(i), float(px[i]), float(py[i])) for i in range(2000)],
         "pt_id long, lon double, lat double")
     got = {r["pt_id"]: r["unit_id"] for r in
-           sj.assign_tiles(spark, pdf, pi, keep_cols=("pt_id",),
-                           prefilter=False).collect()}
+           sj.assign_tiles(spark, pdf, pi, keep_cols=("pt_id",)).collect()}
     ti, tu = pi.probe(px, py)
     truth = {int(i): int(u) for i, u in zip(ti, tu)}
     assert got == truth
