@@ -64,7 +64,8 @@ _POINTS40_SQL = D.points_from_orders_sql(40)
 # =============================================================== spatial ====
 
 def q_tile_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4/J5: engine two-phase PIP join (broadcast R-tree in mapInArrow)."""
+    """J4/J5: engine two-phase PIP join (broadcast cell-keyed polygon index
+    in mapInArrow)."""
     idx = SJ.load_polygon_index_from_fixture()
     pts = _points(spark, sf_dir)
     a = SJ.assign_tiles(spark, pts, idx, keep_cols=("pt_id",))

@@ -1,5 +1,5 @@
 """Pure-numpy kernels (no Spark imports): grid, geometry, RNG, codecs.
 
 These run either driver-side (plan construction: polygon cell cover,
-R-tree build) or inside vectorized pandas/Arrow UDFs on executors.
+polygon index build) or inside vectorized pandas/Arrow UDFs on executors.
 """

@@ -1,4 +1,5 @@
-"""Vectorized numpy geometry kernel: PIP, areas, distances, STR R-tree.
+"""Vectorized numpy geometry kernel: PIP, areas, distances and the
+cell-keyed polygon index.
 
 Re-grounds the reference's ``ee.Geometry`` surface (sig-gis/kaza-lcms):
 ``.coordinates()`` (src/00sample_pts.py:33), ``.bounds()``
@@ -9,15 +10,22 @@ and the implicit point-in-polygon semantics of ``sampleRegions`` /
 src/misc/sentinel1.py:59).
 
 No shapely/geos in this environment — everything is from-scratch numpy,
-designed to run inside Arrow-batched pandas UDFs (vectorized over points)
-or driver-side (R-tree build, polygon cell cover).
+designed to run inside Arrow-batched kernels (vectorized over points)
+or driver-side (index build, polygon cell cover).
 """
 
 from __future__ import annotations
 
 import numpy as np
 
+from . import grid
+
 EARTH_RADIUS_M = 6_371_008.8
+#: grid level of the polygon index's cells. Level 10 cells are ~0.35° —
+#: small enough to prune, big enough that polygon covers stay tiny.
+COARSE_LEVEL = 10
+#: classes of a rect against a polygon (:func:`classify_rects`)
+OUTSIDE, BOUNDARY, INSIDE = 0, 1, 2
 
 
 def polygon_area(xs: np.ndarray, ys: np.ndarray) -> float:
@@ -38,216 +46,171 @@ def haversine_m(lon1, lat1, lon2, lat2) -> np.ndarray:
     return 2.0 * EARTH_RADIUS_M * np.arcsin(np.sqrt(np.clip(a, 0.0, 1.0)))
 
 
-def points_in_polygon(px: np.ndarray, py: np.ndarray, xs: np.ndarray, ys: np.ndarray) -> np.ndarray:
-    """Ray-casting PIP, vectorized over points, looped over polygon edges.
+def _closed_run(xs: np.ndarray) -> np.ndarray:
+    """A ring's vertices with its last vertex repeated in front, so edge
+    e of the ring runs from run[e] to run[e + 1]."""
+    return np.concatenate([xs[-1:], xs])
+
+
+def _even_odd(px, py, vx, vy, first, nedges) -> np.ndarray:
+    """Ray-casting PIP of each point k against its own ring: the closed
+    run (:func:`_closed_run`) of ``nedges[k]`` edges that starts at
+    ``vx/vy[first[k]]``. Points come sorted by ``nedges`` descending, so
+    the points whose ring still has an edge e are a prefix; a
+    ``first``/``nedges`` of length 1 is one ring for every point.
 
     Boundary convention: even-odd rule with half-open edges — points exactly
     on a horizontal-crossing boundary resolve deterministically (a point
     shared by two adjacent tiling polygons lands in exactly one), which the
     spatial join's row-for-row determinism requires.
     """
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    xs = np.asarray(xs, dtype=np.float64)
-    ys = np.asarray(ys, dtype=np.float64)
-    n = len(xs)
-    inside = np.zeros(px.shape, dtype=bool)
-    j = n - 1
-    for i in range(n):
-        xi, yi, xj, yj = xs[i], ys[i], xs[j], ys[j]
-        crosses = (yi > py) != (yj > py)
-        if yi != yj:
-            t = (py - yi) / (yj - yi)
-            xcross = xi + t * (xj - xi)
-            inside ^= crosses & (px < xcross)
-        j = i
+    inside = np.zeros(len(px), dtype=bool)
+    desc = -nedges
+    xj, yj = vx[first], vy[first]
+    # a horizontal edge divides by zero, but never crosses the ray
+    with np.errstate(divide="ignore", invalid="ignore"):
+        for e in range(int(nedges[0]) if len(nedges) else 0):
+            m = len(px) if len(nedges) == 1 else np.searchsorted(desc, -e)
+            j = first[:m] + e + 1
+            xi, yi, xj, yj = vx[j], vy[j], xj[:m], yj[:m]
+            y = py[:m]
+            t = (y - yi) / (yj - yi)
+            inside[:m] ^= ((yi > y) != (yj > y)) & (px[:m] < xi + t * (xj - xi))
+            xj, yj = xi, yi
     return inside
 
 
-def segments_intersect(ax, ay, bx, by, cx, cy, dx, dy) -> bool:
-    """Proper/improper segment intersection test (scalar)."""
-
-    def orient(ox, oy, px, py, qx, qy):
-        v = (px - ox) * (qy - oy) - (py - oy) * (qx - ox)
-        return 0 if v == 0 else (1 if v > 0 else -1)
-
-    o1 = orient(ax, ay, bx, by, cx, cy)
-    o2 = orient(ax, ay, bx, by, dx, dy)
-    o3 = orient(cx, cy, dx, dy, ax, ay)
-    o4 = orient(cx, cy, dx, dy, bx, by)
-    if o1 != o2 and o3 != o4:
-        return True
-
-    def on_seg(ox, oy, px, py, qx, qy):
-        return min(ox, px) <= qx <= max(ox, px) and min(oy, py) <= qy <= max(oy, py)
-
-    if o1 == 0 and on_seg(ax, ay, bx, by, cx, cy):
-        return True
-    if o2 == 0 and on_seg(ax, ay, bx, by, dx, dy):
-        return True
-    if o3 == 0 and on_seg(cx, cy, dx, dy, ax, ay):
-        return True
-    if o4 == 0 and on_seg(cx, cy, dx, dy, bx, by):
-        return True
-    return False
+def points_in_polygon(px: np.ndarray, py: np.ndarray, xs: np.ndarray, ys: np.ndarray) -> np.ndarray:
+    """Ray-casting PIP of many points against one polygon: the one-ring
+    case of the index's (point, polygon) PIP (:func:`_even_odd`)."""
+    px = np.asarray(px, dtype=np.float64)
+    py = np.asarray(py, dtype=np.float64)
+    return _even_odd(px.ravel(), py.ravel(),
+                     _closed_run(np.asarray(xs, dtype=np.float64)),
+                     _closed_run(np.asarray(ys, dtype=np.float64)),
+                     np.zeros(1, dtype=np.intp), np.array([len(xs)])).reshape(px.shape)
 
 
-def rects_intersect_polygon(
+def classify_rects(
     x0: np.ndarray, y0: np.ndarray, x1: np.ndarray, y1: np.ndarray,
     xs: np.ndarray, ys: np.ndarray,
 ) -> np.ndarray:
-    """For each rect [x0,x1]x[y0,y1]: does it intersect the polygon?
+    """OUTSIDE, BOUNDARY or INSIDE for each closed rect [x0,x1]x[y0,y1]
+    against a polygon ring (driver-side: polygon -> cell cover).
 
-    True if (a) any rect corner is inside, (b) any polygon vertex is inside
-    the rect, or (c) any polygon edge crosses any rect edge. Used for
-    polygon -> cell-cover refinement (driver-side; cell counts are small).
+    BOUNDARY when some ring edge meets the rect: their bboxes overlap
+    and the rect's corners are not all strictly on one side of the
+    edge's line (the separating axes of two convex sets). Otherwise the
+    rect is wholly inside or wholly outside the ring, and one corner's
+    PIP tells which. Vectorized over (edge, rect) pairs, in edge blocks
+    of at most ~2^20 pairs.
     """
-    x0 = np.atleast_1d(np.asarray(x0, dtype=np.float64))
-    y0 = np.atleast_1d(np.asarray(y0, dtype=np.float64))
-    x1 = np.atleast_1d(np.asarray(x1, dtype=np.float64))
-    y1 = np.atleast_1d(np.asarray(y1, dtype=np.float64))
-    m = len(x0)
-    out = np.zeros(m, dtype=bool)
-    # (b) polygon vertex inside rect — fully vectorized over rects.
-    for vx, vy in zip(xs, ys):
-        out |= (x0 <= vx) & (vx <= x1) & (y0 <= vy) & (vy <= y1)
-    # (a) rect corners inside polygon.
-    for cx, cy in ((x0, y0), (x1, y0), (x0, y1), (x1, y1)):
-        out |= points_in_polygon(cx, cy, xs, ys)
-    # (c) edge crossings — only for rects not yet matched.
-    todo = np.flatnonzero(~out)
-    if len(todo):
-        n = len(xs)
-        for k in todo:
-            rx0, ry0, rx1, ry1 = x0[k], y0[k], x1[k], y1[k]
-            rect_edges = (
-                (rx0, ry0, rx1, ry0), (rx1, ry0, rx1, ry1),
-                (rx1, ry1, rx0, ry1), (rx0, ry1, rx0, ry0),
-            )
-            j = n - 1
-            hit = False
-            for i in range(n):
-                if max(xs[i], xs[j]) < rx0 or min(xs[i], xs[j]) > rx1 \
-                        or max(ys[i], ys[j]) < ry0 or min(ys[i], ys[j]) > ry1:
-                    j = i
-                    continue
-                for e in rect_edges:
-                    if segments_intersect(xs[j], ys[j], xs[i], ys[i], *e):
-                        hit = True
-                        break
-                if hit:
-                    break
-                j = i
-            out[k] = hit
+    x0, y0, x1, y1 = (np.atleast_1d(np.asarray(a, dtype=np.float64))
+                      for a in (x0, y0, x1, y1))
+    xs = np.asarray(xs, dtype=np.float64)[:, None]
+    ys = np.asarray(ys, dtype=np.float64)[:, None]
+    ex, ey = np.roll(xs, -1, axis=0), np.roll(ys, -1, axis=0)
+    meets = np.zeros(len(x0), dtype=bool)
+    step = max(1, (1 << 20) // max(len(x0), 1))
+    for s in range(0, len(xs), step):
+        ax, ay, bx, by = xs[s:s + step], ys[s:s + step], ex[s:s + step], ey[s:s + step]
+        # the edge's line side of corner (cx, cy) is ty(cy) - tx(cx)
+        ty0, ty1 = (bx - ax) * (y0 - ay), (bx - ax) * (y1 - ay)
+        tx0, tx1 = (by - ay) * (x0 - ax), (by - ay) * (x1 - ax)
+        apart = ((np.minimum(ty0, ty1) > np.maximum(tx0, tx1))
+                 | (np.maximum(ty0, ty1) < np.minimum(tx0, tx1)))
+        meets |= ((np.minimum(ax, bx) <= x1) & (np.maximum(ax, bx) >= x0)
+                  & (np.minimum(ay, by) <= y1) & (np.maximum(ay, by) >= y0)
+                  & ~apart).any(axis=0)
+    xs, ys = xs[:, 0], ys[:, 0]
+    out = np.where(meets, BOUNDARY, OUTSIDE).astype(np.int8)
+    free = np.flatnonzero(~meets)
+    out[free[points_in_polygon(x0[free], y0[free], xs, ys)]] = INSIDE
     return out
 
 
-class STRtree:
-    """Sort-Tile-Recursive packed R-tree over rectangles.
-
-    Built once driver-side over polygon bboxes, pickled into a Spark
-    broadcast, probed with vectorized point batches inside mapInPandas —
-    the physical strategy of the engine's spatial join (the reference's
-    sampleRegions / paint / filterBounds raster<->vector joins,
-    src/utils/sampling.py:148-153, src/utils/s2process.py:18,172).
-
-    Pure numpy arrays -> cheap to pickle/broadcast, no per-node objects.
-    """
-
-    def __init__(self, boxes: np.ndarray, node_capacity: int = 8):
-        boxes = np.asarray(boxes, dtype=np.float64).reshape(-1, 4)
-        self.nleaves = len(boxes)
-        cap = node_capacity
-        levels = [boxes]          # level 0 = item boxes (in STR order)
-        orders = []
-        cur = boxes
-        idx = np.arange(len(boxes))
-        # STR pack: sort by cx into vertical slices, then by cy within slice.
-        cx = (boxes[:, 0] + boxes[:, 2]) / 2.0
-        cy = (boxes[:, 1] + boxes[:, 3]) / 2.0
-        nslices = max(1, int(np.ceil(np.sqrt(len(boxes) / cap))))
-        order = np.lexsort((cy, np.floor(np.argsort(np.argsort(cx)) / max(1, int(np.ceil(len(boxes) / nslices)))),))
-        self.item_order = idx[order]
-        cur = boxes[order]
-        levels[0] = cur
-        # Build parent levels by grouping consecutive `cap` boxes.
-        while len(cur) > cap:
-            ng = int(np.ceil(len(cur) / cap))
-            pad = ng * cap - len(cur)
-            if pad:
-                padded = np.vstack([cur, np.repeat(cur[-1:], pad, axis=0)])
-            else:
-                padded = cur
-            g = padded.reshape(ng, cap, 4)
-            parent = np.empty((ng, 4))
-            parent[:, 0] = g[:, :, 0].min(axis=1)
-            parent[:, 1] = g[:, :, 1].min(axis=1)
-            parent[:, 2] = g[:, :, 2].max(axis=1)
-            parent[:, 3] = g[:, :, 3].max(axis=1)
-            levels.append(parent)
-            cur = parent
-        self.levels = levels
-        self.cap = cap
-        del orders
-
-    def query_point(self, px: float, py: float) -> np.ndarray:
-        """Item indices whose boxes contain the point (original indexing)."""
-        return self.query_box(px, py, px, py)
-
-    def query_box(self, qx0: float, qy0: float, qx1: float, qy1: float) -> np.ndarray:
-        """Item indices whose boxes intersect the query box."""
-        top = len(self.levels) - 1
-        nodes = np.arange(len(self.levels[top]))
-        for lvl in range(top, 0, -1):
-            b = self.levels[lvl][nodes]
-            hit = (b[:, 0] <= qx1) & (b[:, 2] >= qx0) & (b[:, 1] <= qy1) & (b[:, 3] >= qy0)
-            nodes = nodes[hit]
-            # expand to children at lvl-1
-            nchild = len(self.levels[lvl - 1])
-            kids = (nodes[:, None] * self.cap + np.arange(self.cap)[None, :]).ravel()
-            nodes = kids[kids < nchild]
-            if len(nodes) == 0:
-                return np.empty(0, dtype=np.int64)
-        b = self.levels[0][nodes]
-        hit = (b[:, 0] <= qx1) & (b[:, 2] >= qx0) & (b[:, 1] <= qy1) & (b[:, 3] >= qy0)
-        return self.item_order[nodes[hit]]
-
-
 class PolygonIndex:
-    """Broadcast-able bundle: polygon rings + bboxes + STR R-tree.
+    """Broadcast-able polygon set keyed on ``COARSE_LEVEL`` grid cells:
+    the coarse cover, the candidate lookup and the exact PIP of the
+    engine's spatial join in one structure (the physical strategy of the
+    reference's sampleRegions / paint / filterBounds raster<->vector
+    joins, src/utils/sampling.py:148-153, src/utils/s2process.py:18,172).
 
-    `probe(px, py)` returns, for a batch of points, (point_idx, poly_idx)
-    pairs after exact PIP — the inner kernel of the engine's spatial join.
+    Built once on the driver from the per-polygon covers
+    (grid.cover_polygon): a CSR map from each cell of the covers'
+    bounding box of cells (row-major, so the lookup is arithmetic; at
+    most 2^20 cells at level 10) to its candidate polygons, lowest
+    unit_id first, and per cell a flag set when that first candidate
+    holds the whole cell. Pure numpy arrays -> cheap to pickle/broadcast.
     """
 
     def __init__(self, unit_ids, rings_x, rings_y):
         self.unit_ids = np.asarray(unit_ids, dtype=np.int64)
         self.rings_x = [np.asarray(r, dtype=np.float64) for r in rings_x]
         self.rings_y = [np.asarray(r, dtype=np.float64) for r in rings_y]
-        self.boxes = np.array(
-            [[rx.min(), ry.min(), rx.max(), ry.max()] for rx, ry in zip(self.rings_x, self.rings_y)]
-        ).reshape(-1, 4)
-        self.tree = STRtree(self.boxes)
+        none = [np.empty(0)]
+        self._nedges = np.array([len(r) for r in self.rings_x], dtype=np.int64)
+        self._first = np.cumsum(self._nedges + 1) - (self._nedges + 1)
+        self._vx = np.concatenate(none + [_closed_run(r) for r in self.rings_x])
+        self._vy = np.concatenate(none + [_closed_run(r) for r in self.rings_y])
+
+        covers = [grid.cover_polygon(rx, ry, COARSE_LEVEL)
+                  for rx, ry in zip(self.rings_x, self.rings_y)]
+        poly = np.repeat(np.arange(len(covers)), [len(c) for c, _ in covers])
+        ix, iy, _ = grid.decode_ixiy(np.concatenate(
+            [np.empty(0, np.int64)] + [c for c, _ in covers]))
+        inside = np.concatenate([np.empty(0, bool)] + [w for _, w in covers])
+        self._ix0, self._iy0 = (int(ix.min()), int(iy.min())) if len(ix) else (0, 0)
+        self._w = int(ix.max()) - self._ix0 + 1 if len(ix) else 0
+        self._h = int(iy.max()) - self._iy0 + 1 if len(iy) else 0
+        cell = (iy - self._iy0) * self._w + (ix - self._ix0)
+        order = np.lexsort((poly, self.unit_ids[poly], cell))
+        # row w*h is empty: the cell of every point outside the box
+        self._offsets = np.searchsorted(cell[order], np.arange(self._w * self._h + 2))
+        self._cands = poly[order]
+        start = self._offsets[:-1]
+        self._whole = np.zeros(len(start), dtype=bool)
+        nonempty = self._offsets[1:] > start
+        self._whole[nonempty] = inside[order][start[nonempty]]
 
     def probe(self, px: np.ndarray, py: np.ndarray):
-        """Vectorized per-polygon: candidates by bbox, exact by ray cast.
+        """Each point's unit: its coarse cell's candidates, then exact PIP.
 
         Each point belongs to at most one unit (GEE's tiling semantics,
         where each pixel belongs to one stratum): the lowest unit_id wins
         ties on shared borders — a fixed, documented tie-break so join
-        output is row-for-row deterministic.
-        Returns (point_indices, unit_ids).
+        output is row-for-row deterministic. Points outside every cover
+        find no candidate; points of whole cells take the cell's first
+        candidate; the rest run the even-odd PIP against their cell's
+        candidates only.
+        Returns (point_indices ascending, unit_ids).
         """
         px = np.asarray(px, dtype=np.float64)
         py = np.asarray(py, dtype=np.float64)
-        assigned = np.full(len(px), -1, dtype=np.int64)
-        for k in np.argsort(self.unit_ids, kind="stable"):
-            b = self.boxes[k]
-            cand = (assigned < 0) & (px >= b[0]) & (px <= b[2]) & (py >= b[1]) & (py <= b[3])
-            ci = np.flatnonzero(cand)
-            if len(ci) == 0:
-                continue
-            hit = points_in_polygon(px[ci], py[ci], self.rings_x[k], self.rings_y[k])
-            assigned[ci[hit]] = self.unit_ids[k]
-        pi = np.flatnonzero(assigned >= 0)
-        return pi, assigned[pi]
+        ix, iy = grid.lonlat_to_ixiy(px, py, COARSE_LEVEL)
+        col, row = ix - np.uint64(self._ix0), iy - np.uint64(self._iy0)   # wrap below the box
+        cell = np.where((col < self._w) & (row < self._h), row * np.uint64(self._w) + col,
+                        self._w * self._h)
+        assigned = self._whole[cell]
+        unit = np.empty(len(px), dtype=np.int64)
+        wp = np.flatnonzero(assigned)
+        unit[wp] = self.unit_ids[self._cands[self._offsets[cell[wp]]]]
+
+        # one (point, candidate) pair per candidate of a boundary cell,
+        # grouped by point and in unit_id order within a point
+        bp = np.flatnonzero(~assigned)
+        lo = self._offsets[cell[bp]]
+        cnt = self._offsets[cell[bp] + 1] - lo
+        pt = np.repeat(bp, cnt)
+        poly = self._cands[np.arange(len(pt)) + np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)]
+        by_edges = np.argsort(-self._nedges[poly], kind="stable")
+        hit = np.empty(len(pt), dtype=bool)
+        p = poly[by_edges]
+        hit[by_edges] = _even_odd(px[pt[by_edges]], py[pt[by_edges]], self._vx, self._vy,
+                                  self._first[p], self._nedges[p])
+        pt, poly = pt[hit], poly[hit]
+        first = np.flatnonzero(np.diff(pt, prepend=-1))
+        assigned[pt[first]] = True
+        unit[pt[first]] = self.unit_ids[poly[first]]
+        pi = np.flatnonzero(assigned)
+        return pi, unit[pi]

@@ -188,18 +188,29 @@ def cover_bbox(minx: float, miny: float, maxx: float, maxy: float, level: int) -
     return encode_ixiy(gx.ravel(), gy.ravel(), level)
 
 
-def cover_polygon(xs: np.ndarray, ys: np.ndarray, level: int) -> np.ndarray:
-    """Cell ids at `level` intersecting a polygon (over-approximation).
+#: a coordinate within a few ulps of a cell edge may quantize to either
+#: side of it (lonlat_to_ixiy and cell_bounds round differently), so a
+#: cover classifies each cell's rect grown by this margin (degrees): then
+#: every point the quantizer puts in a cell that the polygon holds is in
+#: the cover, and no point on or outside the ring is in an INSIDE cell
+_EDGE_SLACK = 1e-9
 
-    Two-stage: bbox cover, then drop cells that provably miss the polygon
-    (cell rectangle vs polygon intersection test). Over-approximation is
-    safe — the exact PIP stage of the spatial join filters the rest.
+
+def cover_polygon(xs: np.ndarray, ys: np.ndarray, level: int):
+    """(cell ids, inside) at `level`: the cells a polygon reaches, and
+    whether the polygon holds each one whole.
+
+    Two-stage: bbox cover, then each cell's rect (grown by _EDGE_SLACK)
+    is classified against the ring (geom.classify_rects); cells that
+    provably miss the polygon are dropped. Over-approximation is safe —
+    the exact PIP stage of the spatial join filters the rest.
     """
     from . import geom
 
-    cand = cover_bbox(float(xs.min()), float(ys.min()), float(xs.max()), float(ys.max()), level)
-    if len(cand) <= 4:
-        return cand
+    e = _EDGE_SLACK
+    cand = cover_bbox(float(xs.min()) - e, float(ys.min()) - e,
+                      float(xs.max()) + e, float(ys.max()) + e, level)
     x0, y0, x1, y1 = cell_bounds(cand)
-    keep = geom.rects_intersect_polygon(x0, y0, x1, y1, xs, ys)
-    return cand[keep]
+    cls = geom.classify_rects(x0 - e, y0 - e, x1 + e, y1 + e, xs, ys)
+    keep = cls != geom.OUTSIDE
+    return cand[keep], cls[keep] == geom.INSIDE

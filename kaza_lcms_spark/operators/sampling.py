@@ -9,10 +9,11 @@ Re-grounds sig-gis/kaza-lcms stratified sampling:
 * ``randomPoints`` polygon interior point synthesis (src/utils/sampling.py:101,144).
 
 Physical notes for scale: per-class top-k is a single window shuffle on
-the class key (classes ≤ 8 → at most 8 reducers; the heavy lifting is the
-map-side sort feeding the window). For billions of rows per class, swap
-row_number for a two-phase threshold select (sample quantile of r, filter,
-exact top-k on the survivors) — noted in docstring, not needed at test SF.
+the class key (classes ≤ 8 → at most 8 reducers). Its ``_rn <= n`` filter
+against a literal lets Catalyst plan a ``WindowGroupLimit`` partial before
+the shuffle: each task sends only its best n rows per class (a mergeable
+bottom-k summary), and the final window sorts at most tasks × n rows per
+class, not the whole class.
 """
 
 from __future__ import annotations
@@ -39,63 +40,12 @@ def stratified_topk(df: DataFrame, class_col: str, key_col: str,
     out = df.withColumn("_rn", F.row_number().over(w))
     if isinstance(n_per_class, dict):
         limits = F.create_map(*[F.lit(x) for kv in n_per_class.items() for x in kv])
+        # the literal bound plans the WindowGroupLimit; the map lookup alone does not
+        out = out.where(F.col("_rn") <= F.lit(max(n_per_class.values(), default=0)))
         out = out.where(F.col("_rn") <= limits[F.col(class_col)])
     else:
         out = out.where(F.col("_rn") <= F.lit(n_per_class))
     return out.drop("_rn")
-
-
-def stratified_topk_scalable(df: DataFrame, class_col: str, key_col: str,
-                             n_per_class: int, seed_mult: int = 48271,
-                             slack: float = 2.0, max_rounds: int = 4) -> DataFrame:
-    """Scale path for stratified_topk: identical output, but the window
-    sort runs over a pre-filtered sliver instead of whole classes.
-
-    Phase 1 estimates, per class, an approximate rand-threshold at the
-    n/count quantile (percentile_approx — one partial-combining agg, no
-    sort); phase 2 keeps rows below slack×threshold and runs the exact
-    window top-k on the survivors (expected slack·n rows per class, not
-    the class size). If sketch error leaves a class short, the threshold
-    doubles and only that class is retried (driver loop, ≤ max_rounds).
-    At 10¹² rows this turns a full-class sort into a scan + a tiny sort.
-    """
-    withr = df.withColumn("_r", KF.detrand_int(F.col(key_col), seed_mult)).cache()
-    counts = {row[0]: row[1] for row in
-              withr.groupBy(class_col).count().collect()}
-    pending = {c: min(1.0, slack * n_per_class / max(cnt, 1))
-               for c, cnt in counts.items()}
-    out = None
-    for _ in range(max_rounds):
-        if not pending:
-            break
-        # per-class approximate rand-threshold at its own fraction
-        # (classes are few; one tiny agg per class, no sorts)
-        thresholds = {}
-        for c, f in pending.items():
-            row = (withr.where(F.col(class_col) == c)
-                   .agg(F.percentile_approx("_r", F.lit(f), F.lit(10000)).alias("t"))
-                   .collect())
-            if row and row[0]["t"] is not None:
-                thresholds[c] = int(row[0]["t"])
-        cond = None
-        for c, t in thresholds.items():
-            cc = (F.col(class_col) == c) & (F.col("_r") <= F.lit(t))
-            cond = cc if cond is None else cond | cc
-        if cond is None:
-            break
-        w = Window.partitionBy(class_col).orderBy(F.col("_r").asc(), F.col(key_col).asc())
-        picked = (withr.where(cond)
-                  .withColumn("_rn", F.row_number().over(w))
-                  .where(F.col("_rn") <= F.lit(n_per_class)).drop("_rn"))
-        got = {row[0]: row[1] for row in picked.groupBy(class_col).count().collect()}
-        done = [c for c in pending
-                if got.get(c, 0) >= min(n_per_class, counts.get(c, 0))]
-        if done:
-            keep = picked.where(F.col(class_col).isin(done))
-            out = keep if out is None else out.unionByName(keep)
-        pending = {c: min(1.0, f * 2) for c, f in pending.items() if c not in done}
-    withr.unpersist()
-    return out.drop("_r") if out is not None else df.limit(0)
 
 
 def train_test_split(df: DataFrame, key_col: str, frac: float = 0.8,

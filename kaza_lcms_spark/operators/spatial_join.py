@@ -1,4 +1,5 @@
-"""Two-phase spatial join: coarse cell prefilter → broadcast R-tree PIP.
+"""Two-phase spatial join: coarse cell lookup → exact PIP, through one
+broadcast cell-keyed polygon index.
 
 Re-grounds the reference's raster↔vector joins (sig-gis/kaza-lcms):
 ``sampleRegions`` (src/utils/sampling.py:148-153), ``paint``
@@ -8,20 +9,22 @@ containment joins that GEE executes server-side over tiles.
 
 Physical strategy (BASELINE.json::north_star):
 
-1. **Driver-side plan construction** — compute the polygon set's cell cover
-   at a coarse level (kernels.grid.cover_polygon) → a partition-pruning /
-   prefilter predicate. At 100 TB this is what turns a full-table scan into
-   a scan of only the AOI's partitions.
-2. **Narrow map, no shuffle** — build a PolygonIndex (STR R-tree over
-   ring bboxes) once on the driver, broadcast it, and probe it with
-   vectorized point batches in ONE ``mapInArrow`` kernel
+1. **Driver-side plan construction** — compute each polygon's cell cover
+   at a coarse level (kernels.grid.cover_polygon) and key a PolygonIndex
+   on it: per coarse cell, its candidate polygons and whether the first
+   of them holds the whole cell. At 100 TB the same cover is what turns a
+   full-table scan into a scan of only the AOI's partitions.
+2. **Narrow map, no shuffle** — broadcast the index once and probe it
+   with vectorized point batches in ONE ``mapInArrow`` kernel
    (``_assign_kernel``) that every containment join shares: footprint →
-   fine cell → coarse-cover prefilter → PIP. Containment assignment
-   therefore costs ZERO shuffles: it is a map-side broadcast join, the
-   same shape Catalyst picks for small dimension tables, but with an
-   R-tree instead of a hash table. Skewed cells (borders/rivers) cannot hurt a narrow
-   map — skew handling matters only for the *keyed* operators downstream
-   (distance join / kNN), which salt explicitly.
+   coarse-cell lookup (the prefilter: a point in no covered cell has no
+   candidate) → PIP against that cell's candidates → fine cell of the
+   kept rows. Containment assignment therefore costs ZERO shuffles: it
+   is a map-side broadcast join, the same shape Catalyst picks for small
+   dimension tables, with a cell-keyed index as its hash table. Skewed
+   cells (borders/rivers) cannot hurt a narrow map — skew handling
+   matters only for the *keyed* operators downstream (distance join /
+   kNN), which salt explicitly.
 3. **Exact PIP** — even-odd ray casting (kernels.geom.points_in_polygon),
    lowest-unit_id tie-break on shared borders so output is row-for-row
    deterministic (reference parity requirement).
@@ -42,9 +45,8 @@ from pyspark.sql.types import (
 from ..kernels import codec, geom, grid
 from .. import datagen
 
-#: coarse grid level used as prefilter/shuffle key. Level 10 cells are
-#: ~0.35° — small enough to prune, big enough that polygon covers stay tiny.
-COARSE_LEVEL = 10
+#: coarse grid level of the polygon index's cells (the join's prefilter)
+COARSE_LEVEL = geom.COARSE_LEVEL
 #: fine level for per-image cell ids (~2.7 km at l=14 over lat band).
 FINE_LEVEL = 14
 #: columns the tile-assignment kernel derives, in its output order
@@ -154,7 +156,8 @@ def with_cell(df: DataFrame, level: int = FINE_LEVEL,
 
 def load_polygon_index(polys_df: DataFrame,
                        id_col: str = "unit_id") -> geom.PolygonIndex:
-    """Collect a (small) polygon table to the driver and build the R-tree.
+    """Collect a (small) polygon table to the driver and build its
+    cell-keyed index.
 
     Polygon sets in this workload are O(10–10^3) rows (AOI units,
     reference polygons) — always broadcastable; the 10^12-row side is the
@@ -181,7 +184,7 @@ def load_polygon_index_from_fixture() -> geom.PolygonIndex:
 
 def polygon_cover_cells(index: geom.PolygonIndex, level: int = COARSE_LEVEL) -> np.ndarray:
     """Union of coarse cells intersecting any polygon (driver-side)."""
-    cells = [grid.cover_polygon(rx, ry, level)
+    cells = [grid.cover_polygon(rx, ry, level)[0]
              for rx, ry in zip(index.rings_x, index.rings_y)]
     return np.unique(np.concatenate(cells)) if cells else np.empty(0, np.int64)
 
@@ -192,11 +195,12 @@ def _assign_kernel(spark: SparkSession, index: geom.PolygonIndex,
                    out_names: list[str] | None = None):
     """The one tile-assignment kernel behind :func:`assign_tiles`,
     :func:`assign_images_fused` and :func:`zonal_counts_fused`: a
-    ``mapInArrow`` function that runs footprint → fine cell → coarse-cover
-    prefilter → exact R-tree PIP over each Arrow batch.
+    ``mapInArrow`` function that runs footprint → cell-keyed index probe
+    (coarse-cell lookup, then exact PIP) → fine cell over each Arrow
+    batch.
 
-    The index and its coarse cover are broadcast once. The input shape
-    is read from the batch itself:
+    The index is broadcast once; its cell lookup is the prefilter. The
+    input shape is read from the batch itself:
 
     * ``lon``/``lat`` columns are used when present; otherwise the
       footprint is derived from the image id in column 0;
@@ -209,12 +213,11 @@ def _assign_kernel(spark: SparkSession, index: geom.PolygonIndex,
     partial count per unit per task: a manual map-side combine whose
     output is ≤ |polygons| rows."""
     bidx = spark.sparkContext.broadcast(index)
-    bcov = spark.sparkContext.broadcast(polygon_cover_cells(index, COARSE_LEVEL))
 
     def kernel(batches):
         import pyarrow as pa
 
-        ix, cov = bidx.value, bcov.value
+        ix = bidx.value
         counts: dict[int, int] = {}
         for rb in batches:
             if rb.num_rows == 0:
@@ -228,19 +231,17 @@ def _assign_kernel(spark: SparkSession, index: geom.PolygonIndex,
                 lon, lat = datagen.footprint_from_ids(
                     ids.to_numpy() if pa.types.is_integer(ids.type)
                     else _parse_arrow_ids(ids))
-            cell = grid.encode(lon, lat, FINE_LEVEL)
-            keep = np.flatnonzero(np.isin(grid.parent(cell, COARSE_LEVEL), cov))
-            pi, units = ix.probe(lon[keep], lat[keep])
+            rows, units = ix.probe(lon, lat)
             if out_names is None:
                 for u, n in zip(*np.unique(units, return_counts=True)):
                     counts[int(u)] = counts.get(int(u), 0) + int(n)
                 continue
-            rows = keep[pi]
             sel = pa.array(rows)
+            lon, lat = lon[rows], lat[rows]
             arrays = [rb.column(i).take(sel) for i in range(rb.num_columns)]
             if not has_xy:
-                arrays += [pa.array(lon[rows]), pa.array(lat[rows])]
-            arrays += [pa.array(cell[rows]), pa.array(units)]
+                arrays += [pa.array(lon), pa.array(lat)]
+            arrays += [pa.array(grid.encode(lon, lat, FINE_LEVEL)), pa.array(units)]
             yield pa.RecordBatch.from_arrays(arrays, out_names)
         if counts:
             yield pa.RecordBatch.from_arrays(
@@ -275,12 +276,13 @@ def assign_tiles_codegen(points_df: DataFrame, index: geom.PolygonIndex,
     — the whole join runs inside whole-stage codegen, zero Python, zero
     broadcast objects. Pick this when the polygon set is small (~≤100
     convex rings; expression size grows linearly); fall back to the
-    broadcast R-tree ``mapInArrow`` kernel (assign_tiles) otherwise.
+    broadcast cell-keyed index ``mapInArrow`` kernel (assign_tiles)
+    otherwise.
     Tie-break identical to PolygonIndex.probe (lowest unit_id wins;
     tested equivalent).
 
     Measured (32-core VM, 5M rows, 12 polygons): codegen 1.27M rows/s vs
-    R-tree probe 1.47M rows/s — the Arrow-batched numpy probe already
+    numpy probe 1.47M rows/s — the Arrow-batched numpy probe already
     saturates; codegen wins only where Python worker startup or IPC is
     the constraint, and loses as the CASE chain grows with |polygons|."""
     from ..plans import oracles as O
@@ -308,7 +310,7 @@ def assign_tiles_codegen(points_df: DataFrame, index: geom.PolygonIndex,
             if (x2 - x1) * (y3 - y1) - (y2 - y1) * (x3 - x1) <= 0:
                 raise ValueError(
                     f"unit {index.unit_ids[k]} is not strictly convex CCW — "
-                    "use assign_tiles (R-tree probe) instead")
+                    "use assign_tiles (index probe) instead")
         whens.append(
             f"WHEN {O.convex_inside_sql(lon_col, lat_col, cxs, cys)} "
             f"THEN {int(index.unit_ids[k])}L")
@@ -320,8 +322,8 @@ def assign_tiles_codegen(points_df: DataFrame, index: geom.PolygonIndex,
 def assign_images_fused(spark: SparkSession, images_df: DataFrame,
                         index: geom.PolygonIndex) -> DataFrame:
     """Single-pass flagship join over contract-shaped images: footprint
-    derivation + cell encode + coarse-cover prefilter + exact R-tree PIP
-    in ONE ``mapInArrow`` pass of the shared kernel
+    derivation + coarse-cell lookup + exact PIP + fine cell encode in
+    ONE ``mapInArrow`` pass of the shared kernel
     (:func:`_assign_kernel`). No pandas object materialization on either
     side of the boundary: the fixed-width ids parse zero-copy from the
     Arrow data buffer, and kept rows are re-emitted with Arrow ``take``.
@@ -381,6 +383,55 @@ def zonal_stats(assigned: DataFrame, value_cols: tuple[str, ...] = (),
 
 # -------------------------------------------------------------- distance join
 
+def _halo(points_df: DataFrame, radius_deg: float, id_col: str,
+          lon_col: str, lat_col: str, cell_level: int | None,
+          keep_home: bool) -> tuple[DataFrame, DataFrame]:
+    """The halo step of :func:`distance_join` and :func:`thin_points`.
+
+    Returns ``pts`` (pid, px, py, home: the point's cell at
+    ``cell_level``, by default the largest level whose cells are at
+    least ``radius_deg`` tall) and ``rep``: each point once per distinct
+    cell of its home's 3×3 neighbourhood, as (pid, px, py, [home,] cell).
+    """
+    if cell_level is None:
+        # largest level whose cell height >= radius (lat degrees)
+        cell_level = max(0, min(24, int(np.floor(np.log2(180.0 / max(radius_deg, 1e-9))))))
+
+    # NOTE: this encode stays a pandas UDF deliberately (r6): the JVM
+    # morton algebra (with_cell) was measured SLOWER here (0.69 s ->
+    # 1.1 s at sf0.1) — the inner join's inferred isnotnull(cell) filter
+    # gets pushed through the projections and re-inlines the whole
+    # spread chain over the derived lon/lat into a ~16 KB per-row filter
+    # expression; the Python-eval node is a pushdown barrier that keeps
+    # the plan small. with_cell (kNN path) has the footprint UDF as its
+    # barrier, so the JVM encode wins there.
+    @F.pandas_udf(LongType())
+    def enc(lon: pd.Series, lat: pd.Series) -> pd.Series:
+        return pd.Series(grid.encode(lon.to_numpy(), lat.to_numpy(), cell_level))
+
+    pts = points_df.select(
+        F.col(id_col).alias("pid"), F.col(lon_col).alias("px"), F.col(lat_col).alias("py")
+    ).withColumn("home", enc(F.col("px"), F.col("py")))
+
+    types = {"pid": pts.schema["pid"].dataType, "px": DoubleType(),
+             "py": DoubleType(), "home": LongType(), "cell": LongType()}
+    cols = [c for c in types if keep_home or c != "home"]
+    rep_schema = StructType([StructField(c, types[c]) for c in cols])
+
+    def replicate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            if len(b) == 0:
+                continue
+            nb = grid.neighbors(b["home"].to_numpy())  # (n, 9)
+            n, k = nb.shape
+            rep = b.loc[b.index.repeat(k)].reset_index(drop=True)
+            rep["cell"] = nb.ravel()
+            rep = rep.drop_duplicates(subset=["pid", "cell"])
+            yield rep[cols]
+
+    return pts, pts.mapInPandas(replicate, rep_schema)
+
+
 def distance_join(points_df: DataFrame, radius_deg: float,
                   id_col: str = "pt_id",
                   lon_col: str = "lon", lat_col: str = "lat",
@@ -400,46 +451,9 @@ def distance_join(points_df: DataFrame, radius_deg: float,
     (AQE skew-join also covers this at runtime). Results are identical
     for any salt (tested); cost is a ×salt replication of the halo side.
     """
-    if cell_level is None:
-        # largest level whose cell height >= radius (lat degrees)
-        cell_level = max(0, min(24, int(np.floor(np.log2(180.0 / max(radius_deg, 1e-9))))))
-
-    lvl = cell_level
-
-    # NOTE: this encode stays a pandas UDF deliberately (r6): the JVM
-    # morton algebra (with_cell) was measured SLOWER here (0.69 s ->
-    # 1.1 s at sf0.1) — the inner join's inferred isnotnull(cell) filter
-    # gets pushed through the projections and re-inlines the whole
-    # spread chain over the derived lon/lat into a ~16 KB per-row filter
-    # expression; the Python-eval node is a pushdown barrier that keeps
-    # the plan small. with_cell (kNN path) has the footprint UDF as its
-    # barrier, so the JVM encode wins there.
-    @F.pandas_udf(LongType())
-    def enc(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(grid.encode(lon.to_numpy(), lat.to_numpy(), lvl))
-
-    pts = points_df.select(
-        F.col(id_col).alias("pid"), F.col(lon_col).alias("px"), F.col(lat_col).alias("py")
-    ).withColumn("home", enc(F.col("px"), F.col("py")))
-
-    nbr_schema = StructType([
-        StructField("pid", pts.schema["pid"].dataType),
-        StructField("px", DoubleType()), StructField("py", DoubleType()),
-        StructField("cell", LongType()),
-    ])
-
-    def replicate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if len(b) == 0:
-                continue
-            nb = grid.neighbors(b["home"].to_numpy())  # (n, 9)
-            n, k = nb.shape
-            rep = b.loc[b.index.repeat(k)].reset_index(drop=True)
-            rep["cell"] = nb.ravel()
-            rep = rep.drop_duplicates(subset=["pid", "cell"])
-            yield rep[["pid", "px", "py", "cell"]]
-
-    right = (pts.mapInPandas(replicate, nbr_schema)
+    pts, rep = _halo(points_df, radius_deg, id_col, lon_col, lat_col, cell_level,
+                     keep_home=False)
+    right = (rep
              .withColumnRenamed("pid", "pid_b")
              .withColumnRenamed("px", "px_b").withColumnRenamed("py", "py_b"))
     left = pts.withColumnRenamed("home", "cell")
@@ -565,43 +579,8 @@ def thin_points(points_df: DataFrame, radius_deg: float,
     independent of partitioning. Chains longer than one halo radius may
     deviate from a global greedy — deterministic either way.
     """
-    cell_level = max(0, min(24, int(np.floor(np.log2(180.0 / max(radius_deg, 1e-9))))))
-    lvl = cell_level
-
-    # NOTE: this encode stays a pandas UDF deliberately (r6): the JVM
-    # morton algebra (with_cell) was measured SLOWER here (0.69 s ->
-    # 1.1 s at sf0.1) — the inner join's inferred isnotnull(cell) filter
-    # gets pushed through the projections and re-inlines the whole
-    # spread chain over the derived lon/lat into a ~16 KB per-row filter
-    # expression; the Python-eval node is a pushdown barrier that keeps
-    # the plan small. with_cell (kNN path) has the footprint UDF as its
-    # barrier, so the JVM encode wins there.
-    @F.pandas_udf(LongType())
-    def enc(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(grid.encode(lon.to_numpy(), lat.to_numpy(), lvl))
-
-    pts = points_df.select(
-        F.col(id_col).alias("pid"), F.col(lon_col).alias("px"), F.col(lat_col).alias("py")
-    ).withColumn("home", enc(F.col("px"), F.col("py")))
-
-    rep_schema = StructType([
-        StructField("pid", pts.schema["pid"].dataType),
-        StructField("px", DoubleType()), StructField("py", DoubleType()),
-        StructField("home", LongType()), StructField("cell", LongType()),
-    ])
-
-    def replicate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if len(b) == 0:
-                continue
-            nb = grid.neighbors(b["home"].to_numpy())
-            n, k = nb.shape
-            rep = b.loc[b.index.repeat(k)].reset_index(drop=True)
-            rep["cell"] = nb.ravel()
-            rep = rep.drop_duplicates(subset=["pid", "cell"])
-            yield rep[["pid", "px", "py", "home", "cell"]]
-
-    rep = pts.mapInPandas(replicate, rep_schema)
+    pts, rep = _halo(points_df, radius_deg, id_col, lon_col, lat_col, None,
+                     keep_home=True)
     out_schema = StructType([StructField("pid", pts.schema["pid"].dataType)])
     r = radius_deg
 

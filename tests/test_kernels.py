@@ -69,7 +69,7 @@ def test_cover_bbox_contains_points():
 def test_cover_polygon_superset_of_members():
     xs = np.array([20.0, 25.0, 24.0, 21.0])
     ys = np.array([-19.0, -18.5, -14.0, -15.0])
-    cells = grid.cover_polygon(xs, ys, 9)
+    cells, _ = grid.cover_polygon(xs, ys, 9)
     rng = np.random.default_rng(10)
     lon = rng.uniform(xs.min(), xs.max(), 3000)
     lat = rng.uniform(ys.min(), ys.max(), 3000)
@@ -146,18 +146,18 @@ def test_tiling_polygons_assign_each_point_once():
     np.testing.assert_array_equal(units, units2)
 
 
-def test_strtree_matches_bruteforce():
-    rng = np.random.default_rng(12)
-    lo = rng.uniform(0, 100, size=(300, 2))
-    boxes = np.hstack([lo, lo + rng.uniform(0.5, 5, size=(300, 2))])
-    tree = geom.STRtree(boxes)
-    for _ in range(50):
-        q = rng.uniform(0, 100, 2)
-        got = np.sort(tree.query_point(q[0], q[1]))
-        exp = np.flatnonzero(
-            (boxes[:, 0] <= q[0]) & (boxes[:, 2] >= q[0]) & (boxes[:, 1] <= q[1]) & (boxes[:, 3] >= q[1])
-        )
-        np.testing.assert_array_equal(got, exp)
+def test_probe_keeps_negative_and_duplicate_unit_ids():
+    # assignment is a mask, not a -1 sentinel: a negative unit_id is a unit
+    sq = (np.array([0.0, 2.0, 2.0, 0.0]), np.array([0.0, 0.0, 2.0, 2.0]))
+    px, py = np.array([1.0, 4.0, 9.0]), np.array([1.0, 1.0, 1.0])
+    idx = geom.PolygonIndex([-5, 3], [sq[0], sq[0] + 3], [sq[1], sq[1]])
+    pi, units = idx.probe(px, py)
+    assert pi.tolist() == [0, 1] and units.tolist() == [-5, 3]
+    # a duplicate unit_id names one unit over both rings; the lower
+    # unit_id still wins where rings overlap
+    idx = geom.PolygonIndex([7, 7, 2], [sq[0], sq[0] + 3, sq[0]], [sq[1], sq[1], sq[1]])
+    pi, units = idx.probe(px, py)
+    assert pi.tolist() == [0, 1] and units.tolist() == [2, 7]
 
 
 def test_polygon_area():
@@ -180,7 +180,8 @@ def test_rects_intersect_polygon():
     x1 = np.array([2.0, 6.0, 6.0, 0.5])
     y1 = np.array([2.0, 6.0, 6.0, 2.0])
     np.testing.assert_array_equal(
-        geom.rects_intersect_polygon(x0, y0, x1, y1, xs, ys), [True, False, True, True]
+        geom.classify_rects(x0, y0, x1, y1, xs, ys),
+        [geom.INSIDE, geom.OUTSIDE, geom.BOUNDARY, geom.BOUNDARY]
     )
 
 

@@ -21,7 +21,7 @@ def optimized_of(df) -> str:
 
 
 def test_flagship_has_no_shuffle(spark, fixture_dir):
-    """Tile assignment is a narrow map: broadcast R-tree probe, no
+    """Tile assignment is a narrow map: broadcast polygon index probe, no
     Exchange anywhere in the per-row plan."""
     imgs = spark.read.parquet(fixture_dir + "/images.parquet")
     idx = SJ.load_polygon_index_from_fixture()
@@ -81,6 +81,19 @@ def test_filter_pushdown_reaches_scan(spark, fixture_dir):
     df = imgs.where(F.col("fmt") == "raw").select("image_id")
     scan = [ln for ln in plan_of(df).splitlines() if "FileScan" in ln][0]
     assert "PushedFilters" in scan and "fmt" in scan, scan
+
+
+def test_stratified_topk_plans_a_group_limit(spark):
+    """Both forms of stratified_topk bound row_number by a literal, so
+    each task keeps only its best n rows per class before the shuffle
+    (WindowGroupLimit Partial); the dict form's per-class map lookup
+    alone plans none."""
+    from kaza_lcms_spark.operators import sampling as S
+
+    df = spark.range(400).select("id", (F.col("id") % 4).alias("cls"))
+    for n in (50, {0: 10, 1: 50, 2: 5, 3: 0}):
+        plan = plan_of(S.stratified_topk(df, "cls", "id", n))
+        assert re.search(r"WindowGroupLimit .*, 50, Partial", plan), plan
 
 
 def test_extraction_join_broadcasts_small_side(spark, fixture_dir):

@@ -56,20 +56,78 @@ def test_pip_translation_invariance(nvert, dx, dy, seed):
     assert (a == b).mean() > 0.995
 
 
-@given(st.integers(min_value=1, max_value=200), st.integers(min_value=0, max_value=10**6))
-@settings(max_examples=50, deadline=None)
-def test_strtree_equals_bruteforce(n, seed):
+#: coarse cell width/height in degrees (exact binary fractions)
+CW, CH = 360.0 / 2**geom.COARSE_LEVEL, 180.0 / 2**geom.COARSE_LEVEL
+
+
+def _ulp_nudge(v, rng):
+    """Each value as is, or moved one ulp down or up."""
+    k = rng.integers(-1, 2, size=np.shape(v))
+    return np.where(k < 0, np.nextafter(v, -np.inf),
+                    np.where(k > 0, np.nextafter(v, np.inf), v))
+
+
+def _probe_case(rng, n_polys):
+    """Polygons over a window of 8x8 coarse cells, vertices mostly on a
+    quarter-cell lattice (so edges lie along cell boundaries, some moved
+    an ulp off them): rects, rect pairs split along a shared border,
+    concave L shapes and concave star rings. Points: uniform, on the
+    lattice (on and an ulp around cell boundaries and ring edges), and
+    outside every cover."""
+    i0 = rng.integers(1, 2**geom.COARSE_LEVEL - 10)
+    j0 = rng.integers(1, 2**geom.COARSE_LEVEL - 10)
+    X = lambda q: -180.0 + (i0 + np.asarray(q) / 4.0) * CW
+    Y = lambda q: -90.0 + (j0 + np.asarray(q) / 4.0) * CH
+    rings = []
+    while len(rings) < n_polys:
+        qa, qb = np.sort(rng.choice(33, 2, replace=False))
+        ra, rb = np.sort(rng.choice(33, 2, replace=False))
+        xa, xb, ya, yb = X(qa), X(qb), Y(ra), Y(rb)
+        kind = rng.integers(4)
+        if kind == 0:
+            rings.append(([xa, xb, xb, xa], [ya, ya, yb, yb]))
+        elif kind == 1 and qb - qa >= 2:
+            xm = X(rng.integers(qa + 1, qb))
+            rings += [([xa, xm, xm, xa], [ya, ya, yb, yb]),
+                      ([xm, xb, xb, xm], [ya, ya, yb, yb])]
+        elif kind == 2 and qb - qa >= 2 and rb - ra >= 2:
+            xm, ym = X(rng.integers(qa + 1, qb)), Y(rng.integers(ra + 1, rb))
+            rings.append(([xa, xb, xb, xm, xm, xa], [ya, ya, ym, ym, yb, yb]))
+        else:
+            m = rng.integers(5, 12)
+            ang = np.sort(rng.random(m)) * 2 * np.pi
+            r = (0.3 + rng.random(m)) * (xb - xa + CW) / 2
+            rings.append(((xa + xb) / 2 + r * np.cos(ang), (ya + yb) / 2 + r * np.sin(ang) / 2))
+    rings = [(_ulp_nudge(np.array(x, float), rng) if rng.random() < 0.3 else np.array(x, float),
+              np.array(y, float)) for x, y in rings[:n_polys]]
+    n = 300
+    px = np.concatenate([X(rng.uniform(-4, 36, n)), _ulp_nudge(X(rng.integers(-4, 37, n)), rng),
+                         X(rng.uniform(60, 90, 20))])
+    py = np.concatenate([Y(rng.uniform(-4, 36, n)), _ulp_nudge(Y(rng.integers(-4, 37, n)), rng),
+                         Y(rng.uniform(-4, 36, 20))])
+    return rings, px, py
+
+
+@given(st.integers(min_value=0, max_value=2**32 - 1), st.integers(min_value=1, max_value=8))
+@settings(max_examples=150, deadline=None)
+def test_probe_equals_first_hit_bruteforce(seed, n_polys):
+    """The cell-keyed probe (cover lookup, whole-cell flag, PIP of
+    boundary cells) against a test-side brute force with no cover: every
+    ring in unit_id order, points_in_polygon, the first hit wins."""
     rng = np.random.default_rng(seed)
-    boxes = rng.random((n, 4))
-    boxes[:, 2:] = boxes[:, :2] + rng.random((n, 2)) * 0.3
-    tree = geom.STRtree(boxes)
-    q = rng.random(4)
-    q[2:] = q[:2] + rng.random(2) * 0.4
-    got = set(tree.query_box(*q).tolist())
-    want = {i for i in range(n)
-            if boxes[i, 0] <= q[2] and boxes[i, 2] >= q[0]
-            and boxes[i, 1] <= q[3] and boxes[i, 3] >= q[1]}
-    assert got == want
+    rings, px, py = _probe_case(rng, n_polys)
+    unit_ids = rng.integers(-3, 4, size=len(rings))   # negative and duplicate ids
+    idx = geom.PolygonIndex(unit_ids, [r[0] for r in rings], [r[1] for r in rings])
+    pi, units = idx.probe(px, py)
+
+    want = np.zeros(len(px), dtype=np.int64)
+    done = np.zeros(len(px), dtype=bool)
+    for k in np.argsort(unit_ids, kind="stable"):
+        hit = ~done & geom.points_in_polygon(px, py, *rings[k])
+        want[hit] = unit_ids[k]
+        done |= hit
+    assert pi.tolist() == np.flatnonzero(done).tolist()
+    assert units.tolist() == want[done].tolist()
 
 
 @given(st.lists(st.integers(min_value=0, max_value=2**62), min_size=1,

@@ -222,7 +222,7 @@ def test_verify_invariants_contract(spark, fixture_dir):
 
 
 def test_codegen_assign_equals_rtree(spark, fixture_dir, poly_index):
-    """The compiled CASE-chain strategy must match the R-tree probe
+    """The compiled CASE-chain strategy must match the index probe
     row-for-row (same lowest-unit-id tie-break)."""
     imgs = spark.read.parquet(fixture_dir + "/images.parquet")
     pts = sj.with_footprint(imgs.select("image_id"))
@@ -234,7 +234,7 @@ def test_codegen_assign_equals_rtree(spark, fixture_dir, poly_index):
 
 
 def test_assign_tiles_concave_polygons(spark):
-    """The R-tree probe path must handle NON-convex polygons (where the
+    """The index probe path must handle NON-convex polygons (where the
     codegen strategy refuses): L-shape and notched rectangle vs brute
     force on a point grid."""
     L = (np.array([0, 4, 4, 2, 2, 0], float), np.array([0, 0, 2, 2, 4, 4], float))

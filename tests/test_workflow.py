@@ -115,22 +115,6 @@ def test_composite_workflow_end_to_end(spark, fixture_dir):
     assert all(se >= 0 for _, se in props.values())
 
 
-def test_stratified_topk_scalable_equals_exact(spark, fixture_dir):
-    """The two-phase threshold select must produce EXACTLY the same rows
-    as the full-sort window version."""
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    a = S.stratified_topk(ev, "event_type", "event_id", 50) \
-        .select("event_id").toPandas()["event_id"].sort_values().tolist()
-    b = S.stratified_topk_scalable(ev, "event_type", "event_id", 50) \
-        .select("event_id").toPandas()["event_id"].sort_values().tolist()
-    assert a == b
-    # n larger than a class: returns the whole class, same as exact
-    lc = spark.read.parquet(f"{fixture_dir}/landcover_cells.parquet").limit(500)
-    a2 = sorted(r["cell_id"] for r in S.stratified_topk(lc, "LANDCOVER", "cell_id", 400).collect())
-    b2 = sorted(r["cell_id"] for r in S.stratified_topk_scalable(lc, "LANDCOVER", "cell_id", 400).collect())
-    assert a2 == b2
-
-
 def test_concurrent_rf_fits_identical_to_sequential(spark):
     """primitives_to_collection submits per-class fits from a driver
     thread pool (r3 verdict item #2); the output must be byte-identical

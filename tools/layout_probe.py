@@ -113,7 +113,7 @@ def main() -> None:
     # --- AOI predicate: unit 0's level-10 Morton cover, merged ranges
     idx = SJ.load_polygon_index_from_fixture()
     cover = np.sort(grid.cover_polygon(idx.rings_x[0], idx.rings_y[0],
-                                       CELL_LEVEL))
+                                       CELL_LEVEL)[0])
     ranges = merge_ranges(cover)
     pred = None
     for lo, hi in ranges:

@@ -35,9 +35,9 @@ def main() -> None:
     sf = "/root/testdata/sf0.01"
 
     sections = [
-        ("Flagship: fused tile assignment (footprint → cell → prefilter → "
-         "R-tree PIP, one mapInPandas, ZERO shuffles; scan prunes to "
-         "image_id only)",
+        ("Flagship: fused tile assignment (footprint → cell lookup → "
+         "cell-keyed index PIP, one mapInPandas, ZERO shuffles; scan prunes "
+         "to image_id only)",
          SJ.assign_images_fused(spark, imgs, idx)),
         ("Flagship + zonal (manual map-side combine: per-batch partials, "
          "then partial_sum/sum hash-agg over ≤|units| rows per batch)",
