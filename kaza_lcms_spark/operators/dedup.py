@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import text as T
+from ..plans.fixpoint import fixpoint
 
 M31 = 2147483647
 
@@ -140,8 +141,7 @@ def simhash(df: DataFrame, bits: int = 16, text_col: str = "text",
     return dt.groupBy(id_col).agg(acc.alias("simhash"))
 
 
-def duplicate_clusters(pairs: DataFrame, max_rounds: int = 32,
-                       shortcut: bool = True) -> DataFrame:
+def duplicate_clusters(pairs: DataFrame, max_rounds: int = 32) -> DataFrame:
     """Connected components over near-duplicate pairs → (node, cluster_id)
     with cluster_id = min reachable node id. The canonicalization step of
     a dedup pipeline (each cluster keeps its lowest-id representative).
@@ -150,44 +150,33 @@ def duplicate_clusters(pairs: DataFrame, max_rounds: int = 32,
     every node adopts the min label among itself and its neighbors, then
     compresses label ← label(label) (one self-join — labels are node
     ids, and label values only ever decrease toward reachable minima, so
-    the shortcut is always a reachable candidate). Effective propagation
-    distance DOUBLES per round: O(log diameter) rounds instead of the
-    plain propagation's O(diameter) — a 300-link duplicate chain closes
-    in 8 rounds instead of 300 (tested). This is the star-contraction
-    idea of the large-scale CC literature in its simplest correct form;
-    ``shortcut=False`` restores plain propagation. Each round is two
-    joins + one hash-agg, checkpointed to keep lineage flat."""
+    the shortcut is always a reachable candidate). Along a chain of
+    increasing ids the propagation distance DOUBLES per round: 300 links
+    close in 9 rounds, not 300 (tested); shuffled ids gain less (40
+    links take 23 rounds). This is the star-contraction idea of the
+    large-scale CC literature in its simplest correct form. Each round
+    is two joins + one hash-agg and ONE eager checkpoint, whose job
+    also counts the changed labels (plans.fixpoint)."""
     edges = (pairs.select(F.col("a").alias("x"), F.col("b").alias("y"))
              .unionByName(pairs.select(F.col("b").alias("x"), F.col("a").alias("y"))))
     labels = (edges.select(F.col("x").alias("node")).distinct()
               .withColumn("label", F.col("node")))
-    for _ in range(max_rounds):
-        nbr_min = (edges.join(labels.withColumnRenamed("node", "y"), "y")
+
+    def step(labels: DataFrame) -> DataFrame:
+        nbr_min = (edges.join(labels.select(F.col("node").alias("y"), "label"), "y")
                    .groupBy("x").agg(F.min("label").alias("nbr_label")))
-        new_labels = (labels.join(nbr_min.withColumnRenamed("x", "node"), "node", "left")
-                      .select("node",
-                              F.least(F.col("label"),
-                                      F.coalesce("nbr_label", "label")).alias("label")))
-        if shortcut:
-            hop = new_labels.select(F.col("node").alias("label"),
-                                    F.col("label").alias("_ll"))
-            new_labels = (new_labels.join(hop, "label", "left")
-                          .select("node",
-                                  F.least(F.col("label"),
-                                          F.coalesce("_ll", "label")).alias("label")))
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "node")
-                   .where(F.col("n.label") != F.col("o.label")).limit(1).count())
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"duplicate_clusters did not converge within {max_rounds} "
-            "min-label-propagation rounds (component diameter too large). "
-            "Raise max_rounds — partial labels would mislabel clusters.")
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
+        prop = (labels.join(nbr_min.withColumnRenamed("x", "node"), "node", "left")
+                .select("node", F.col("label").alias("old"),
+                        F.least(F.col("label"),
+                                F.coalesce("nbr_label", "label")).alias("label")))
+        hop = prop.select(F.col("node").alias("label"), F.col("label").alias("_ll"))
+        label = F.least(F.col("label"), F.coalesce("_ll", "label"))
+        return (prop.join(hop, "label", "left")
+                .select("node", label.alias("label"),
+                        (label != F.col("old")).alias("flag")))
+
+    return (fixpoint("duplicate_clusters", labels, step, max_rounds, "labels changed")
+            .select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")))
 
 
 def cosine_near_dup_pairs(emb: DataFrame, threshold: float = 0.35,

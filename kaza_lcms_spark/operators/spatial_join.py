@@ -44,6 +44,7 @@ from pyspark.sql.types import (
 
 from ..kernels import codec, geom, grid
 from .. import datagen
+from ..plans.fixpoint import fixpoint
 
 #: coarse grid level of the polygon index's cells (the join's prefilter)
 COARSE_LEVEL = geom.COARSE_LEVEL
@@ -481,8 +482,7 @@ def distance_join(points_df: DataFrame, radius_deg: float,
 def thin_points_exact(points_df: DataFrame, radius_deg: float,
                       id_col: str = "pt_id",
                       lon_col: str = "lon", lat_col: str = "lat",
-                      max_rounds: int = 64,
-                      stats: dict | None = None) -> DataFrame:
+                      max_rounds: int = 64) -> DataFrame:
     """EXACT distributed greedy thinning: identical output to the
     sequential fold the reference runs (iterate-dedup,
     /root/reference/src/utils/sampling.py:37-48, keep-lowest-id order).
@@ -502,68 +502,43 @@ def thin_points_exact(points_df: DataFrame, radius_deg: float,
     tools/thin_probe.py measures this at 1M points; ids assigned
     MONOTONICALLY along a dense curve are the adversarial case, where
     the sequential greedy itself has linear decision depth and no exact
-    parallelization can beat the chain). Each round is one join against
-    the still-undecided frontier (distance_join computes the neighbor
-    graph once, up front). ``stats`` (optional dict) receives
-    ``{"rounds": r}``."""
+    parallelization can beat the chain).
+
+    State: (pid, st, pending lower-id neighbors, higher-id neighbors). A
+    point decided last round tells its higher neighbors its state once,
+    then empties its list, so a round reads only the frontier's edges:
+    one shuffle and ONE eager checkpoint (plans.fixpoint)."""
     pts = points_df.select(id_col, lon_col, lat_col)
-    pairs = distance_join(pts, radius_deg, id_col, lon_col, lat_col).cache()
-    # lower-id neighbor lists: edges a<b mean "b depends on a". The live
-    # edge set SHRINKS each round: an edge whose pid is decided can never
-    # influence anything again, and an edge whose lower is DROPPED
-    # neither blocks (not undecided) nor kills (not kept) — pruning both
-    # keeps later rounds scanning the frontier's edges, not the full
-    # neighbor graph (measured ~2× at 1M points, 52M pairs).
-    ids = pts.select(F.col(id_col).alias("pid"))
-    undecided = ids
-    live = pairs.withColumnRenamed("a", "lower").withColumnRenamed("b", "pid")
-    # pruning pays a per-round materialization; on small graphs that
-    # latency exceeds the scan it saves — one count on the (cached)
-    # pair set decides (2.4× at 1M points / 52M edges; a wash below ~1M)
-    prune_edges = pairs.count() >= 1_000_000
-    kept = None
-    converged = False
-    rounds = 0
-    for _ in range(max_rounds):
-        if undecided.isEmpty():
-            converged = True
-            break
-        rounds += 1
-        und_lower = live.join(undecided.withColumnRenamed("pid", "lower"),
-                              "lower", "left_semi")
-        kept_lower = (live.join(kept.withColumnRenamed("pid", "lower"), "lower",
-                                "left_semi") if kept is not None
-                      else live.where(F.lit(False)))
-        # early drop: a kept lower-id neighbor is final evidence (the
-        # dropped set itself needs no accumulator — dropped points simply
-        # leave `undecided` and never block anything)
-        new_dropped = undecided.join(kept_lower.select("pid").distinct(), "pid",
-                                     "left_semi")
-        # keep: every lower-id nbr decided (none undecided), none kept
-        new_kept = (undecided.join(new_dropped, "pid", "left_anti")
-                    .join(und_lower.select("pid").distinct(), "pid", "left_anti"))
-        kept = new_kept if kept is None else kept.union(new_kept)
-        undecided = (undecided.join(new_dropped, "pid", "left_anti")
-                     .join(new_kept, "pid", "left_anti"))
-        kept = kept.localCheckpoint(eager=True)
-        undecided = undecided.localCheckpoint(eager=True)
-        if prune_edges:
-            live = (live.join(undecided, "pid", "left_semi")
-                    .join(new_dropped.withColumnRenamed("pid", "lower"),
-                          "lower", "left_anti")
-                    .localCheckpoint(eager=True))
-    converged = converged or undecided.isEmpty()
-    if stats is not None:
-        stats["rounds"] = rounds
-    pairs.unpersist()
-    if not converged:
-        n_left = undecided.count()
-        raise RuntimeError(
-            f"thin_points_exact did not converge within {max_rounds} rounds: "
-            f"{n_left} points still undecided (dependency chain deeper than "
-            "max_rounds). Raise max_rounds — returning a partial kept set "
-            "would silently break the sequential-greedy equivalence.")
-    return kept.select(F.col("pid"))
+    pairs = distance_join(pts, radius_deg, id_col, lon_col, lat_col)
+    # st: 0 undecided, 1 kept, 2 dropped; a NULL list is an empty one
+    state = (pts.select(F.col(id_col).alias("pid"), F.lit(0).alias("st"))
+             .join(pairs.groupBy(F.col("a").alias("pid"))
+                   .agg(F.collect_list("b").alias("highers")), "pid", "left")
+             .join(pairs.groupBy(F.col("b").alias("pid"))
+                   .agg(F.count("a").alias("pending")), "pid", "left")
+             .fillna(0, ["pending"]))
+
+    def step(state: DataFrame) -> DataFrame:
+        told = (state.where(F.col("st") != 0)
+                .select(F.explode("highers").alias("pid"), F.col("st").alias("told")))
+        agg = (state.unionByName(told, allowMissingColumns=True)
+               .groupBy("pid")
+               .agg(F.max("st").alias("st"), F.max("pending").alias("pending"),
+                    F.first("highers", ignorenulls=True).alias("highers"),
+                    F.bool_or(F.col("told") == 1).alias("hit"),
+                    F.count(F.when(F.col("told") == 2, 1)).alias("n_drop")))
+        pending = F.col("pending") - F.col("n_drop")
+        st = (F.when(F.col("st") != 0, F.col("st"))
+              .when(F.col("hit"), F.lit(2))
+              .when(pending == 0, F.lit(1))
+              .otherwise(F.lit(0)))
+        # a point decided before this round has now told its neighbors
+        return agg.select("pid", st.alias("st"), pending.alias("pending"),
+                          F.when(F.col("st") == 0, F.col("highers")).alias("highers"),
+                          (st == 0).alias("flag"))
+
+    return (fixpoint("thin_points_exact", state, step, max_rounds, "points still undecided")
+            .where(F.col("st") == 1).select("pid"))
 
 
 def thin_points(points_df: DataFrame, radius_deg: float,

@@ -2,6 +2,9 @@
 LSH candidate density collapses on dispersed corpora, and the hot-bucket
 cap keeps degenerate buckets from going quadratic."""
 
+import logging
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -168,29 +171,57 @@ def test_token_tid_matches_duckdb(spark):
         assert got[t] == want, t
 
 
-def test_duplicate_clusters_long_chain_pointer_doubling(spark):
+def test_duplicate_clusters_long_chain_pointer_doubling(spark, caplog):
     """A 300-link duplicate chain (diameter 300) closes in O(log d)
-    rounds via pointer doubling; plain propagation needs a round per
-    link and must exhaust max_rounds=16 loudly."""
+    rounds via pointer doubling, well within max_rounds=16; one round
+    fewer than it needs raises instead of returning partial labels."""
+    caplog.set_level(logging.INFO, logger="kaza_lcms_spark.plans.fixpoint")
     pairs = spark.createDataFrame([(i, i + 1) for i in range(300)],
                                   "a long, b long")
     rows = DD.duplicate_clusters(pairs, max_rounds=16).collect()
     assert len(rows) == 301
     assert all(r["cluster_id"] == 0 for r in rows)
-    with pytest.raises(RuntimeError):
-        DD.duplicate_clusters(pairs, max_rounds=16, shortcut=False)
+    rounds = [r.rounds for r in caplog.records if hasattr(r, "rounds")][-1]
+    assert rounds <= 16
+    with pytest.raises(RuntimeError, match="did not converge within"):
+        DD.duplicate_clusters(pairs, max_rounds=rounds - 1)
 
 
-def test_duplicate_clusters_shortcut_equals_plain(spark):
-    """Pointer doubling changes round count, never the fixpoint: same
-    labels as plain propagation on a multi-component fixture."""
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(5)] + [(10, 11), (11, 12), (20, 21)],
-        "a long, b long")
-    a = sorted(map(tuple, DD.duplicate_clusters(pairs).collect()))
-    b = sorted(map(tuple,
-                   DD.duplicate_clusters(pairs, shortcut=False).collect()))
-    assert a == b
+def test_duplicate_clusters_equals_union_find(spark):
+    """Same labels as a driver-side union-find (min id per component)
+    on several components: short chains, isolated pairs, a star, a
+    40-link chain with shuffled ids and random pairs joined by two
+    extra links."""
+    rng = np.random.default_rng(7)
+    edges = [(10, 11), (11, 12), (20, 21), (30, 31), (40, 41)]
+    edges += [(100 + i, 101 + i) for i in range(5)]
+    edges += [(500, 500 + k) for k in range(1, 8)]
+    mid = [1000 + int(i) for i in rng.permutation(41)]
+    edges += list(zip(mid[:-1], mid[1:]))
+    edges += [(int(a), int(b)) for a, b in
+              rng.permutation(np.arange(2000, 2030)).reshape(-1, 2)]
+    edges += [(2001, 2010), (2015, 2024)]
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    want = sorted((n, find(n)) for n in parent)
+    pairs = spark.createDataFrame([(min(a, b), max(a, b)) for a, b in edges],
+                                  "a long, b long")
+    got = sorted(map(tuple, DD.duplicate_clusters(pairs).collect()))
+    assert got == want
+
+
+def test_duplicate_clusters_no_pairs(spark):
+    pairs = spark.createDataFrame([], "a long, b long")
+    out = DD.duplicate_clusters(pairs)
+    assert out.columns == ["doc_id", "cluster_id"] and out.collect() == []
 
 
 def test_banded_hamming_verify_before_distinct_plan(spark):

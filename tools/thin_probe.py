@@ -26,12 +26,24 @@ Usage: python tools/thin_probe.py [n_points]
 
 from __future__ import annotations
 
+import logging
+import os
 import sys
 import time
 
 sys.path.insert(0, "/root/repo")
 
 RADIUS = 0.01
+
+
+class _Rounds(logging.Handler):
+    """Keeps the round count of the last fixpoint run (plans.fixpoint
+    logs one record per run)."""
+
+    rounds = None
+
+    def emit(self, record: logging.LogRecord) -> None:
+        self.rounds = getattr(record, "rounds", self.rounds)
 
 
 def _corpus(spark, n: int):
@@ -63,20 +75,24 @@ def main() -> None:
     from kaza_lcms_spark.operators import spatial_join as SJ
     from kaza_lcms_spark.session import get_spark
 
-    spark = get_spark(app_name="thin-probe", master="local[32]",
+    cores = os.cpu_count()
+    spark = get_spark(app_name="thin-probe", master=f"local[{cores}]",
                       shuffle_partitions=64)
+    rounds = _Rounds()
+    fp_log = logging.getLogger("kaza_lcms_spark.plans.fixpoint")
+    fp_log.addHandler(rounds)
+    fp_log.setLevel(logging.INFO)
 
     pts = _corpus(spark, n).cache()
     pts.count()
     pairs = SJ.distance_join(pts, RADIUS).cache()
     n_pairs = pairs.count()
 
-    stats: dict = {}
     t0 = time.time()
-    kept = SJ.thin_points_exact(pts, RADIUS, max_rounds=256,
-                                stats=stats).cache()
+    kept = SJ.thin_points_exact(pts, RADIUS, max_rounds=256).cache()
     n_kept = kept.count()
     wall = time.time() - t0
+    n_rounds = rounds.rounds
 
     # exactness invariants at full scale (see module docstring)
     kept_a = kept.withColumnRenamed("pid", "a")
@@ -103,15 +119,15 @@ def main() -> None:
     adv.count()
     # ~n/3 latency-bound tiny rounds: shrink the per-round task count
     spark.conf.set("spark.sql.shuffle.partitions", "4")
-    astats: dict = {}
     t0 = time.time()
-    akept = SJ.thin_points_exact(adv, RADIUS, max_rounds=4096, stats=astats)
+    akept = SJ.thin_points_exact(adv, RADIUS, max_rounds=4096)
     n_akept = akept.count()
     awall = time.time() - t0
+    a_rounds = rounds.rounds
 
     lines = [
         "",
-        f"## Thinning at probe scale: exact greedy MIS fixpoint ({n:,} points, local[32])",
+        f"## Thinning at probe scale: exact greedy MIS fixpoint ({n:,} points, local[{cores}])",
         "",
         f"River-skewed corpus (70% on a dense squiggle, {n_pairs:,}",
         f"radius-{RADIUS}° neighbor pairs), hash-permuted ids",
@@ -121,24 +137,24 @@ def main() -> None:
         "",
         "| arm | points | rounds | kept | wall sec | points/sec |",
         "|---|---|---|---|---|---|",
-        f"| hash ids (production) | {n:,} | {stats['rounds']} | {n_kept:,} "
+        f"| hash ids (production) | {n:,} | {n_rounds} | {n_kept:,} "
         f"| {wall:.1f} | {n / wall:,.0f} |",
-        f"| monotone ids (adversarial) | {n_adv:,} | {astats['rounds']} "
+        f"| monotone ids (adversarial) | {n_adv:,} | {a_rounds} "
         f"| {n_akept:,} | {awall:.1f} | {n_adv / awall:,.0f} |",
         "",
-        f"Hash-id rounds stay logarithmic ({stats['rounds']} at 1M; the",
+        f"Hash-id rounds stay logarithmic ({n_rounds} at {n:,} points; the",
         "round count is the longest kept/undecided dependency chain).",
         "Monotone chain ids are the documented adversarial case: the",
         "SEQUENTIAL greedy itself has linear decision depth there",
-        f"(measured rounds = 2 per kept point: {astats['rounds']} rounds",
+        f"(measured rounds = 2 per kept point: {a_rounds} rounds",
         f"for {n_akept} kept — one drop round + one keep round per",
         "decision), so no exact parallelization can beat the chain —",
         "assign hash/random ids when thinning priority is free to choose.",
     ]
     with open("/root/repo/BENCH/BASELINE.md", "a") as f:
         f.write("\n".join(lines) + "\n")
-    print(f"1M arm: rounds {stats['rounds']}, kept {n_kept}, {wall:.1f}s; "
-          f"adversarial: rounds {astats['rounds']}, kept {n_akept}, {awall:.1f}s")
+    print(f"{n:,}-point arm: rounds {n_rounds}, kept {n_kept}, {wall:.1f}s; "
+          f"adversarial: rounds {a_rounds}, kept {n_akept}, {awall:.1f}s")
     spark.stop()
 
 
