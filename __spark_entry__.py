@@ -796,11 +796,11 @@ def q_knn_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn_per_cell_mega(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J8 mega tier, value-gated: per-cell Hamming top-3 where EVERY
-    cell is forced down the broadcast-free block-grid path
-    (broadcast_cap=0 peels all hot cells; chunk 12 → 3 item chunks × 4
-    query salts per cell). The oracle is the plain per-cell window SQL —
-    the grid decomposition must reproduce it exactly, ties included."""
+    """J8 hot tier, value-gated: per-cell Hamming top-3 where EVERY
+    cell (~33 rows) is hot and takes the block-grid join (threshold 20;
+    chunk 12 → 3 item chunks × 4 query salts per cell, window merge).
+    The oracle is the plain per-cell window SQL — the grid decomposition
+    must reproduce it exactly, ties included."""
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
     h = (F.shiftleft(F.col("doc_id") * F.lit(48271) % F.lit(M31), 31)
          .bitwiseOR(F.col("doc_id") * F.lit(69621) % F.lit(M31)))
@@ -808,7 +808,7 @@ def q_knn_per_cell_mega(spark: SparkSession, sf_dir: str) -> DataFrame:
                       h.alias("h"))
     out = KNN.knn_per_cell(pts, k=3, cell_col="cell", id_col="doc_id",
                            hash_col="h", salt_threshold=20, salt_buckets=4,
-                           broadcast_cap=0, mega_chunk_rows=12)
+                           chunk_rows=12)
     return out.orderBy("doc_id", "hamming", "neighbor_id")
 
 

@@ -131,7 +131,14 @@ def fit_prims(train: DataFrame, feature_cols: list[str],
     on a small training table can't saturate a cluster, and sequential
     fits idle it between barriers). Returns ``{class: (model,
     used_feature_cols)}`` in ``classes`` order regardless of completion
-    order, so downstream unions are deterministic."""
+    order, so downstream unions are deterministic.
+
+    The models depend on the training rows alone, never on how the
+    caller partitioned or ordered them: MLlib seeds bagging and split
+    sampling per partition index and row order, so the fit input is
+    rebuilt from content — ``⌈n_rows/1000⌉`` partitions, rows placed by
+    a hash of the columns the fit reads and sorted within each
+    partition on those columns."""
     if classes is None:
         classes = [r[0] for r in
                    train.select(label_col).distinct().orderBy(label_col).collect()]
@@ -140,16 +147,13 @@ def fit_prims(train: DataFrame, feature_cols: list[str],
     # depth level per node group); on a finely partitioned small training
     # table the per-job task scheduling dominates the fit (measured on
     # the bench table, 4000 rows × 32 partitions → 4: concurrency-4
-    # stage 4.96 s → 3.36 s, sequential 10.1 s → 7.5 s). Right-size to
-    # ≥ ~1000 rows per partition, never increasing the partition count —
-    # scale-adaptive (a big table keeps its parallelism), and identical
-    # for every class/arm so sequential vs concurrent stay comparable.
-    n_rows = train.count()
-    cur = train.rdd.getNumPartitions()
-    target = max(1, min(cur, -(-n_rows // 1000)))
-    if target < cur:
-        train = train.coalesce(target)
-
+    # stage 4.96 s → 3.36 s, sequential 10.1 s → 7.5 s), hence ~1000
+    # rows per partition. Identical for every class/arm, so sequential
+    # and concurrent fits stay comparable.
+    cols = list(dict.fromkeys([*feature_cols, label_col]))
+    n_part = max(1, -(-train.count() // 1000))
+    train = (train.select(*cols).repartition(n_part, *cols)
+             .sortWithinPartitions(*cols).persist())
     sc = train.sparkSession.sparkContext
 
     def fit_one(ic):
@@ -167,12 +171,15 @@ def fit_prims(train: DataFrame, feature_cols: list[str],
         finally:
             sc.setLocalProperty("spark.scheduler.pool", None)
 
-    if concurrency <= 1 or len(classes) <= 1:
-        fitted = [fit_one(ic) for ic in enumerate(classes)]
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=min(concurrency, len(classes))) as ex:
-            fitted = list(ex.map(fit_one, enumerate(classes)))
+    try:
+        if concurrency <= 1 or len(classes) <= 1:
+            fitted = [fit_one(ic) for ic in enumerate(classes)]
+        else:
+            from concurrent.futures import ThreadPoolExecutor
+            with ThreadPoolExecutor(max_workers=min(concurrency, len(classes))) as ex:
+                fitted = list(ex.map(fit_one, enumerate(classes)))
+    finally:
+        train.unpersist()
     return dict(zip(classes, fitted))
 
 

@@ -14,8 +14,10 @@ Three strategies, by scale:
 * ``cosine_topk_ivf`` / ``ivf_candidate_pairs`` — the approximate scale
   path: codebook-bucketed candidates, one shuffle on bucket id.
 * ``knn_per_cell`` — the spatial scale path: comparisons restricted to
-  each point's own (salted) cell, bounded-domain counting top-k; the 10¹²
-  analog of GEE's withinDistance join (src/utils/sampling.py:12-28).
+  each point's own cell, bounded-domain counting top-k; cold cells run
+  one kernel each, hot cells a block-grid join of item chunks × query
+  salts. The 10¹² analog of GEE's withinDistance join
+  (src/utils/sampling.py:12-28).
 
 Hamming kNN over phash (images) / simhash (docs) uses the same shapes
 with bit_count(xor) distance — JVM-side.
@@ -438,57 +440,31 @@ def hamming_topk(df: DataFrame, k: int = 3, id_col: str = "doc_id",
 
 def _knn_block(ids: np.ndarray, h: np.ndarray, q_rows: np.ndarray,
                k: int, id_col: str) -> list[pd.DataFrame]:
-    """Top-k Hamming neighbors for query rows q_rows against the full
-    id-sorted (ids, h) item set. Ties break (distance, id).
+    """Top-k Hamming neighbors for query rows q_rows of the id-sorted
+    (ids, h) item set, each query excluding itself: the within-set case
+    of :func:`_knn_block_xq`."""
+    return _knn_block_xq(ids[q_rows], h[q_rows], ids, h, k, id_col)
+
+
+def _knn_block_xq(q_ids: np.ndarray, q_h: np.ndarray, i_ids: np.ndarray,
+                  i_h: np.ndarray, k: int, id_col: str) -> list[pd.DataFrame]:
+    """Top-k Hamming neighbors for the queries (q_ids, q_h) among the
+    id-sorted items (i_ids, i_h) — the one per-cell kNN kernel. Ties
+    break (distance, id). An item whose id equals the query's is the
+    query itself and is skipped: ``searchsorted`` finds where each query
+    id sorts, O(b·log n), so queries need not be items (a hot cell's
+    query meets its own row in only one of the cell's item chunks).
+    Each row keeps min(k, items other than itself) neighbors.
 
     Selection exploits the bounded distance domain (0..64): a per-row
     distance histogram gives the k-th-smallest threshold in one linear
     pass, candidates (≤ threshold, includes boundary ties) come from one
     nonzero scan, and only those few are lexsorted — O(b·n) total versus
     the full per-row argsort's O(b·n·log n) (measured 2.3× on 20k-item
-    cells; identical output incl. heavy ties, tested)."""
-    from ..kernels import codec
-
-    n = len(ids)
-    kk = min(k, n - 1)
-    outs = []
-    block = max(256, 8_000_000 // max(n, 1))
-    for s in range(0, len(q_rows), block):
-        rows = q_rows[s:s + block]
-        b = len(rows)
-        d = codec.hamming64(h[rows, None], h[None, :])   # (b, n), values 0..64
-        d[np.arange(b), rows] = 65                       # exclude self
-        counts = np.bincount(
-            (d + (np.arange(b) * 66)[:, None]).ravel(),
-            minlength=b * 66).reshape(b, 66)
-        thr = (counts.cumsum(axis=1) >= kk).argmax(axis=1)  # k-th distance
-        rr, cc = np.nonzero(d <= thr[:, None])           # row-major: cc = id order
-        cd = d[rr, cc]
-        order = np.lexsort((cc, cd, rr))                 # (row, distance, id)
-        rr, cc, cd = rr[order], cc[order], cd[order]
-        starts = np.searchsorted(rr, np.arange(b))
-        pos = np.arange(len(rr)) - starts[rr]
-        sel = pos < kk
-        outs.append(pd.DataFrame({
-            id_col: ids[rows][rr[sel]],
-            "neighbor_id": ids[cc[sel]],
-            "hamming": cd[sel],
-        }))
-    return outs
-
-
-def _knn_block_xq(q_ids: np.ndarray, q_h: np.ndarray, i_ids: np.ndarray,
-                  i_h: np.ndarray, k: int, id_col: str) -> list[pd.DataFrame]:
-    """Cross-set variant of :func:`_knn_block`: top-k Hamming neighbors
-    for an explicit query array against a SEPARATE id-sorted item array
-    (the mega-cell block-grid kernel — queries and items arrive as
-    different chunk slices of the same cell). Self-pairs are excluded by
-    id equality, not position, because a query's own row lives in exactly
-    one item chunk. Same bounded-domain counting selection and
-    (distance, id) tie-break as _knn_block; per-chunk top-k is exact, so
-    the global window merge over chunk candidates reproduces the
-    single-kernel output (top-k of a union of per-subset top-k equals
-    global top-k under a total order)."""
+    cells; identical output incl. heavy ties, tested). Top-k over an item
+    subset is exact, so a window merge over item chunks reproduces the
+    whole-cell result (top-k of a union of per-subset top-k equals global
+    top-k under a total order)."""
     from ..kernels import codec
 
     n = len(i_ids)
@@ -498,22 +474,23 @@ def _knn_block_xq(q_ids: np.ndarray, q_h: np.ndarray, i_ids: np.ndarray,
         qi, qh = q_ids[s:s + block], q_h[s:s + block]
         b = len(qi)
         d = codec.hamming64(qh[:, None], i_h[None, :])   # (b, n), 0..64
-        d[qi[:, None] == i_ids[None, :]] = 65            # exclude self by id
+        at = np.searchsorted(i_ids, qi)
+        own = np.flatnonzero(at < n)
+        own = own[i_ids[at[own]] == qi[own]]
+        d[own, at[own]] = 65                             # exclude self
         counts = np.bincount(
             (d + (np.arange(b) * 66)[:, None]).ravel(),
             minlength=b * 66).reshape(b, 66)
-        valid = counts[:, :65].sum(axis=1)
-        kk = np.minimum(k, valid)                        # chunk may hold < k items
         cum = counts[:, :65].cumsum(axis=1)
+        kk = np.minimum(k, cum[:, -1])                   # chunk may hold < k
         thr = (cum >= np.maximum(kk, 1)[:, None]).argmax(axis=1)
-        # valid == 0 rows: every distance is 65, nothing passes thr = 0
-        rr, cc = np.nonzero(d <= thr[:, None])           # cc id-ordered (items sorted)
+        # rows with no valid item: every distance is 65, none passes thr 0
+        rr, cc = np.nonzero(d <= thr[:, None])           # cc id-ordered
         cd = d[rr, cc]
         order = np.lexsort((cc, cd, rr))                 # (row, distance, id)
         rr, cc, cd = rr[order], cc[order], cd[order]
         starts = np.searchsorted(rr, np.arange(b))
-        pos = np.arange(len(rr)) - starts[rr]
-        sel = pos < k
+        sel = np.arange(len(rr)) - starts[rr] < k
         outs.append(pd.DataFrame({
             id_col: qi[rr[sel]],
             "neighbor_id": i_ids[cc[sel]],
@@ -522,50 +499,40 @@ def _knn_block_xq(q_ids: np.ndarray, q_h: np.ndarray, i_ids: np.ndarray,
     return outs
 
 
-def _knn_mega_cells(points: DataFrame, k: int, cell_col: str, id_col: str,
-                    hash_col: str, cell_rows: dict, chunk_rows: int,
-                    salt_buckets: int, out_schema: StructType) -> DataFrame:
-    """Exact per-cell kNN for cells too large to broadcast: a block-grid
-    join, the join-shuffle analog of cosine_topk_blocked's broadcast
-    grid. Items are hash-chunked into ``ceil(n/chunk_rows)`` uniform
-    chunks, queries are salted into ``salt_buckets`` groups, and both
-    sides are replicated so every (item chunk × query salt) pair meets in
-    one bounded kernel; a window merge keeps the global per-query top-k.
+def _knn_hot_cells(hot_df: DataFrame, k: int, cell_col: str, id_col: str,
+                   hash_col: str, chunks: dict, salt_buckets: int,
+                   out_schema: StructType) -> DataFrame:
+    """Exact per-cell kNN for hot cells as a block-grid join. Each cell's
+    items are hash-chunked into ``chunks[cell]`` uniform chunks, its
+    queries are salted into ``salt_buckets`` groups, and both sides are
+    replicated so every (item chunk × query salt) pair meets in one
+    bounded kernel. With one chunk a query meets its whole cell in one
+    group and its top-k is final; only when some cell has more chunks
+    does a window merge keep the global per-query top-k.
 
-    Chosen over the child-cell descent the broadcast guard used to
-    suggest: spatial children of a hot river/border cell inherit its
-    skew (one child can carry most of the parent), while hash chunks are
-    uniform by construction — and descent changes which neighbors share
-    a kernel, requiring halo logic to stay exact. Shuffle volume is
-    n·(salt_buckets + n/chunk_rows) rows of (id, hash) per cell —
-    n²/chunk_rows grows with the cell, but stays ~chunk_rows× smaller
-    than the kernel's inherent O(n²) distance computations (which any
-    EXACT per-cell kNN must perform), and no task or broadcast ever
-    holds more than chunk_rows + its query slice."""
+    Hash chunks are uniform by construction, unlike spatial child cells,
+    which inherit a river or border cell's skew and would need halo
+    logic to stay exact. Shuffle volume is n·(salt_buckets + chunks) rows
+    of (id, hash) per cell, far below the kernel's inherent O(n²)
+    distance work, and no task holds more than one chunk plus its query
+    slice."""
     from ..plans import salting as SALT
 
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    spark = points.sparkSession
-    chunks = {c: max(1, -(-n // chunk_rows)) for c, n in cell_rows.items()}
     nchunk_schema = StructType([
-        StructField(cell_col, points.schema[cell_col].dataType),
+        StructField(cell_col, hot_df.schema[cell_col].dataType),
         StructField("_nchunks", IntegerType()),
     ])
-    nchunk_df = F.broadcast(spark.createDataFrame(
+    nchunk_df = F.broadcast(hot_df.sparkSession.createDataFrame(
         list(chunks.items()), nchunk_schema))
-    pts = points.select(cell_col, id_col, hash_col).join(nchunk_df, cell_col)
+    pts = hot_df.join(nchunk_df, cell_col)
     # items: one chunk each, replicated to every query-salt group
-    items = (pts.withColumn("_ichunk",
-                            F.pmod(F.xxhash64(F.col(id_col)), F.col("_nchunks")))
-             .withColumn("_ichunk", F.col("_ichunk").cast("int"))
+    items = (pts.withColumn("_ichunk", F.pmod(F.xxhash64(F.col(id_col)),
+                                              F.col("_nchunks")).cast("int"))
              .withColumn("_qsalt", F.explode(F.sequence(
                  F.lit(0), F.lit(salt_buckets - 1))))
              .withColumn("_side", F.lit(0)))
     # queries: one salt group each, replicated to every item chunk
-    queries = (pts.withColumn("_qsalt",
-                              F.pmod(F.xxhash64(F.col(id_col)),
-                                     F.lit(salt_buckets)).cast("int"))
+    queries = (SALT.with_salt(pts, id_col, salt_buckets, "_qsalt")
                .withColumn("_ichunk", F.explode(F.sequence(
                    F.lit(0), F.col("_nchunks") - 1)))
                .withColumn("_side", F.lit(1)))
@@ -584,9 +551,12 @@ def _knn_mega_cells(points: DataFrame, k: int, cell_col: str, id_col: str,
                              i_ids[order], i_h[order], k, id_col)
         return pd.concat(outs)
 
+    # explicit-N: AQE would fold the salted groups back into few tasks
     cands = (SALT.pin_kernel_partitions(both, cell_col, "_ichunk", "_qsalt")
              .groupBy(cell_col, "_ichunk", "_qsalt")
              .applyInPandas(per_block, out_schema))
+    if max(chunks.values()) == 1:
+        return cands
     w = Window.partitionBy(id_col).orderBy(F.col("hamming").asc(),
                                            F.col("neighbor_id").asc())
     return (cands.withColumn("_rn", F.row_number().over(w))
@@ -681,39 +651,35 @@ def caption_knn_per_cell(points: DataFrame, k: int,
 def knn_per_cell(points: DataFrame, k: int, cell_col: str = "cell_id",
                  id_col: str = "image_id", hash_col: str = "phash",
                  salt_threshold: int = 20000, salt_buckets: int = 8,
-                 broadcast_cap: int = 20_000_000,
-                 mega_chunk_rows: int = 1_000_000,
-                 spark: SparkSession | None = None) -> DataFrame:
+                 chunk_rows: int = 1_000_000) -> DataFrame:
     """Per-cell kNN by phash Hamming distance — the north-star "caption
     neighbors per cell" operator, with EXPLICIT skew salting
     (plans.salting): hot river/border cells would otherwise pin one task
     per cell.
 
-    Three tiers, routed from ONE cell histogram (no path raises — every
-    input has an exact plan):
+    Two tiers, routed from ONE cell histogram (the only eager work while
+    the frame is built; every input has an exact plan):
 
-    * cold cells → groupBy(cell).applyInPandas, one kernel per cell;
-    * hot cells (> salt_threshold rows) → their (id, hash) columns are
-      broadcast (items side), queries are salted into `salt_buckets`
-      sub-groups and probed against the broadcast — no task owns a whole
-      hot cell, results identical (tested);
-    * mega cells — the largest hot cells are peeled off (biggest first)
-      until the remaining hot total fits ``broadcast_cap`` rows — take
-      the block-grid join path (:func:`_knn_mega_cells`): items
-      hash-chunked into ≤ ``mega_chunk_rows`` uniform chunks, queries
-      salted, every chunk×salt pair probed in a bounded kernel, global
-      top-k merged by window. Exact, broadcast-free, identical output
-      (tested vs brute force).
+    * cold cells (and NULL cells) → groupBy(cell).applyInPandas, one
+      kernel per cell;
+    * hot cells (> ``salt_threshold`` rows) → the block-grid join of
+      :func:`_knn_hot_cells`: items hash-chunked into
+      ``ceil(n / chunk_rows)`` uniform chunks, queries salted into
+      ``salt_buckets`` groups, every chunk × salt pair probed in one
+      bounded kernel. A window merge runs only when some hot cell has
+      more than one chunk. No task owns a whole hot cell, no hot row
+      passes through the driver, and the output is identical to the
+      cold path's (tested).
     """
     from ..plans import salting as SALT
 
     # Narrow to the three columns every branch needs (the routing
-    # histogram, the hot-cell toPandas, and the cold/hot/mega outputs
-    # each re-derive the input subtree; a narrow projection keeps those
-    # recomputes to the columns the kNN actually uses). An eager
-    # localCheckpoint here was measured SLOWER (2.1 s → 3.5 s on the
-    # bench corpus): the serial materialization wave costs more than the
-    # overlapped recomputes it saves.
+    # histogram and the cold/hot outputs each re-derive the input
+    # subtree; a narrow projection keeps those recomputes to the columns
+    # the kNN actually uses). An eager localCheckpoint here was measured
+    # SLOWER (2.1 s → 3.5 s on the bench corpus): the serial
+    # materialization wave costs more than the overlapped recomputes it
+    # saves.
     points = points.select(cell_col, id_col, hash_col)
 
     out_schema = StructType([
@@ -733,73 +699,20 @@ def knn_per_cell(points: DataFrame, k: int, cell_col: str = "cell_id",
         outs = _knn_block(ids, h, np.arange(n), k, id_col)
         return pd.concat(outs)
 
-    # one histogram drives all routing (hot membership AND the broadcast
-    # budget — the old separate hot_df.count() pass is folded in here)
-    hist = {r[0]: r[1] for r in SALT.cell_histogram(points, cell_col)
-            .where(F.col("n") > salt_threshold).collect()}
-    hot = list(hist)
-    # peel the largest cells into the mega tier until the remaining hot
-    # broadcast fits the cap — deterministic (size desc, cell id asc)
-    mega: list = []
-    hot_total = sum(hist.values())
-    for c in sorted(hot, key=lambda c: (-hist[c], c)):
-        if hot_total <= broadcast_cap:
-            break
-        mega.append(c)
-        hot_total -= hist[c]
-    mega_set = set(mega)
-    hot = [c for c in hot if c not in mega_set]
-    mega_df = points.where(F.col(cell_col).isin(mega)) if mega else None
-    # null-safe exclusion (r6 advice fix): ~isin(mega) evaluates to NULL
-    # for NULL cells, silently dropping them from the output only when a
-    # mega tier exists — with no mega tier the same rows flow to the
-    # cold path. Keep NULL-cell rows on the cold path explicitly (a NULL
-    # cell is never in the mega list).
-    hot_df, cold_df = SALT.split_hot_cold(
-        points.where(~F.col(cell_col).isin(mega) | F.col(cell_col).isNull())
-        if mega else points,
-        hot, cell_col)
-    if spark is None:
-        spark = points.sparkSession
+    # one histogram drives all routing: hot membership and chunk counts.
+    # A NULL cell is never hot: IN over a list holding NULL is NULL for
+    # every other cell, which would drop them from the cold path.
+    chunks = {r[0]: -(-r[1] // chunk_rows) for r in
+              SALT.cell_histogram(points, cell_col)
+              .where(F.col("n") > salt_threshold).collect()
+              if r[0] is not None}
+    hot_df, cold_df = SALT.split_hot_cold(points, list(chunks), cell_col)
     # pin the kernel stage's task count (AQE coalescing can't see the
     # O(n²) per-cell cost — see plans.salting.pin_kernel_partitions)
     cold_out = (SALT.pin_kernel_partitions(cold_df, cell_col)
                 .groupBy(cell_col).applyInPandas(per_cell, out_schema))
-    if mega:
-        cold_out = cold_out.unionByName(_knn_mega_cells(
-            mega_df, k, cell_col, id_col, hash_col,
-            {c: hist[c] for c in mega}, mega_chunk_rows, salt_buckets,
-            out_schema))
-    if not hot:
+    if not chunks:
         return cold_out
-    # broadcast hot-cell item sets (probe columns only, id-sorted) —
-    # bounded by broadcast_cap by construction of the mega split above.
-    # Arrow transfer + numpy grouping, not collect(): at the 20M-row
-    # broadcast cap, Row objects cost ~10 GB of driver heap and a 20M-
-    # iteration Python loop; toPandas is columnar end-to-end. ids are
-    # unique, so id-sorting matches the old (id, hash)-tuple sort.
-    hot_pdf = hot_df.select(cell_col, id_col, hash_col).toPandas()
-    packed = {}
-    for c, grp in hot_pdf.groupby(cell_col, sort=False):
-        order = np.argsort(grp[id_col].to_numpy(), kind="stable")
-        packed[c] = (grp[id_col].to_numpy()[order],
-                     grp[hash_col].to_numpy().astype(np.int64)[order])
-    b_items = spark.sparkContext.broadcast(packed)
-
-    # explicit-N again: a column-only repartition is AQE-coalescible and
-    # would fold the salted probes back into one task (see cold path)
-    salted = SALT.pin_kernel_partitions(
-        SALT.with_salt(hot_df, id_col, salt_buckets), cell_col, "salt")
-
-    def probe_hot(batches):
-        items = b_items.value
-        for b in batches:
-            if not len(b):
-                continue
-            for c, grp in b.groupby(cell_col):
-                ids, h = items[c]
-                pos = np.searchsorted(ids, grp[id_col].to_numpy())
-                yield from _knn_block(ids, h, pos, k, id_col)
-
-    hot_out = salted.select(cell_col, id_col).mapInPandas(probe_hot, out_schema)
-    return cold_out.unionByName(hot_out)
+    return cold_out.unionByName(_knn_hot_cells(
+        hot_df, k, cell_col, id_col, hash_col, chunks, salt_buckets,
+        out_schema))

@@ -13,10 +13,11 @@ time outs"). Our engine plans skew explicitly (SURVEY.md §4):
    (groupBy/applyInPandas); hot cells take a salted path — their rows are
    split into `salt = hash(id) % k` sub-groups so no single task owns a
    whole hot cell. For per-cell kNN, sub-group queries still need the
-   whole cell's items: the hot cells' (id, key) columns are broadcast
-   (bounded: only hot cells, only the probe columns), so each salted task
-   probes its query slice against the full cell — a broadcast-items /
-   partitioned-queries join, the same shape as a broadcast hash join.
+   whole cell's items: a block-grid join replicates each hot cell's
+   (id, key) item chunks to every query salt group, so each group probes
+   its query slice against one item chunk, and a window merge keeps the
+   global top-k when a cell has more than one chunk. Nothing is
+   collected to or broadcast from the driver.
 
 AQE's skew-join splitting handles sort-merge joins at runtime; this
 planner covers the applyInPandas/groupBy paths AQE cannot split.

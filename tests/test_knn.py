@@ -56,35 +56,65 @@ def test_knn_salted_equals_unsalted(spark, cell_points):
 
 
 def test_knn_mega_path_equals_unsalted(spark, cell_points):
-    """A cell exceeding broadcast_cap must take the block-grid join path
-    (no broadcast, hash-chunked items × salted queries) and still emit
+    """Hot cells split into several item chunks take the block-grid join
+    (hash-chunked items × salted queries, window merge) and still emit
     exactly the single-kernel result — including heavy phash ties."""
     unsalted = KNN.knn_per_cell(cell_points, k=3, salt_threshold=10**9)
-    # tiny caps so fixture cells become "mega": every hot cell (> 20
-    # rows) is peeled (cap 0), items split into many 40-row chunks
+    # every cell > 20 rows is hot; items split into 40-row chunks
     mega = KNN.knn_per_cell(cell_points, k=3, salt_threshold=20,
-                            salt_buckets=4, broadcast_cap=0,
-                            mega_chunk_rows=40)
+                            salt_buckets=4, chunk_rows=40)
     a = sorted(tuple(r) for r in unsalted.collect())
     b = sorted(tuple(r) for r in mega.collect())
     assert a == b
 
 
 def test_knn_mega_split_is_partial(spark, cell_points):
-    """broadcast_cap between the largest and total hot sizes routes ONLY
-    the biggest cells to the grid path; the mix still matches brute."""
-    sizes = sorted((r["n"], r["cell_id"]) for r in cell_points
+    """chunk_rows between the hot-cell sizes gives one run both one-chunk
+    hot cells (no merge needed) and multi-chunk ones (window merge); the
+    mix still equals the unsalted result."""
+    sizes = sorted(r["n"] for r in cell_points
                    .groupBy("cell_id").agg(F.count(F.lit(1)).alias("n"))
-                   .collect())
-    biggest = sizes[-1][0]
-    assert biggest > 40, "fixture should have a > 40-row cell"
+                   .where(F.col("n") > 20).collect())
+    chunk_rows = sizes[len(sizes) // 2]
+    assert sizes[0] <= chunk_rows < sizes[-1], sizes
     unsalted = KNN.knn_per_cell(cell_points, k=3, salt_threshold=10**9)
     mixed = KNN.knn_per_cell(cell_points, k=3, salt_threshold=20,
-                             salt_buckets=4, broadcast_cap=biggest - 1,
-                             mega_chunk_rows=25)
+                             salt_buckets=4, chunk_rows=chunk_rows)
     a = sorted(tuple(r) for r in unsalted.collect())
     b = sorted(tuple(r) for r in mixed.collect())
     assert a == b
+
+
+def test_knn_per_cell_build_runs_only_the_histogram(spark, fixture_dir):
+    """With hot cells present, building the kNN frame runs the routing
+    histogram and no other Spark job: hot cells are never collected to
+    the driver or broadcast from it. The input is not cached, so no job
+    count depends on which test filled a cache first."""
+    import uuid
+
+    from kaza_lcms_spark.plans import salting as SALT
+
+    sc = spark.sparkContext
+    imgs = spark.read.parquet(fixture_dir + "/images.parquet") \
+        .select("image_id", "phash")
+    cell_points = SJ.with_cell(SJ.with_footprint(imgs), level=8)
+
+    def jobs(build):
+        group = f"knn-build-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    pts = cell_points.select("cell_id", "image_id", "phash")
+    hist = jobs(lambda: SALT.cell_histogram(pts, "cell_id")
+                .where(F.col("n") > 20).collect())
+    build = jobs(lambda: KNN.knn_per_cell(cell_points, k=3, salt_threshold=20,
+                                          salt_buckets=4))
+    assert hist > 0 and build == hist, (build, hist)
 
 
 def test_cosine_blocked_equals_relational(spark, sf_dir="/root/testdata/sf0.001"):
@@ -378,9 +408,10 @@ def test_cosine_ivf_foreign_id_batch_keeps_colliding_ids(spark):
 
 
 def test_knn_per_cell_null_cells_survive_mega_peel(spark):
-    """r6 advice fix: with a mega tier peeled, NULL-cell rows used to be
-    silently dropped (~isin(mega) is NULL for NULL cells); the same
-    input must yield the same coverage with and without a mega tier."""
+    """r6 advice fix: NULL-cell rows used to be silently dropped once a
+    grid tier was peeled (~isin(mega) is NULL for NULL cells); the same
+    input must yield the same coverage with and without multi-chunk hot
+    cells."""
     rows = [(i, i % 3 if i % 7 else None, (i * 2654435761) % (1 << 62))
             for i in range(60)]
     pts = spark.createDataFrame(rows, "doc_id long, cell long, h long")
@@ -388,13 +419,27 @@ def test_knn_per_cell_null_cells_survive_mega_peel(spark):
                                hash_col="h", salt_threshold=100)
     forced_mega = KNN.knn_per_cell(pts, k=2, cell_col="cell", id_col="doc_id",
                                    hash_col="h", salt_threshold=10,
-                                   broadcast_cap=0, mega_chunk_rows=8)
+                                   chunk_rows=8)
     a = sorted(map(tuple, no_mega.collect()))
     b = sorted(map(tuple, forced_mega.collect()))
     assert a == b
     null_ids = {r[0] for r in rows if r[1] is None}
     covered = {t[0] for t in b}
     assert null_ids & covered == null_ids & {t[0] for t in a}
+
+
+def test_knn_per_cell_large_null_cell_stays_cold(spark):
+    """A NULL cell above the hot threshold must not enter the hot list:
+    IN over a list holding NULL is NULL for every other cell, which
+    would drop the cold cells' rows."""
+    rows = [(i, None if i % 2 else i % 5, (i * 2654435761) % (1 << 62))
+            for i in range(60)]
+    pts = spark.createDataFrame(rows, "doc_id long, cell long, h long")
+    cold = KNN.knn_per_cell(pts, k=2, cell_col="cell", id_col="doc_id",
+                            hash_col="h", salt_threshold=100)
+    low = KNN.knn_per_cell(pts, k=2, cell_col="cell", id_col="doc_id",
+                           hash_col="h", salt_threshold=20, salt_buckets=3)
+    assert sorted(map(tuple, low.collect())) == sorted(map(tuple, cold.collect()))
 
 
 def test_salted_split_keeps_null_cells(spark):

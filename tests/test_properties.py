@@ -2,7 +2,7 @@
 pure-numpy layer (no Spark session needed; fast)."""
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from kaza_lcms_spark.kernels import codec, geom, grid, rand
@@ -210,39 +210,78 @@ def test_frame_container_roundtrip_any_payload(frames):
     assert [f for _, f in codec.iter_frames(blob)] == frames
 
 
+def _hamming_brute(q_ids, q_h, i_ids, i_h, k):
+    """{query id: [(distance, neighbor id)]}: a direct sort over the same
+    (distance, id) order, skipping the item with the query's id."""
+    want = {}
+    for qi, qh in zip(q_ids, q_h):
+        d = codec.hamming64(i_h, np.full(len(i_h), qh, dtype=np.int64))
+        mask = i_ids != qi
+        cand = sorted(zip(d[mask].tolist(), i_ids[mask].tolist()))[:k]
+        if cand:
+            want[qi] = cand
+    return want
+
+
+def _hamming_got(outs, id_col):
+    import pandas as pd
+
+    got = {}
+    res = pd.concat(outs) if outs else pd.DataFrame(
+        {id_col: [], "neighbor_id": [], "hamming": []})
+    for q, nb, dist in zip(res[id_col], res["neighbor_id"], res["hamming"]):
+        got.setdefault(q, []).append((int(dist), nb))
+    return {q: sorted(v) for q, v in got.items()}
+
+
+def _knn_ids(rng, n, as_str):
+    ids = np.sort(rng.choice(10_000, size=n, replace=False)).astype(np.int64)
+    return np.array([f"img_{i:06d}" for i in ids], dtype=object) if as_str else ids
+
+
 @given(st.integers(1, 40), st.integers(1, 60), st.integers(1, 8),
-       st.integers(0, 2**31 - 1), st.integers(1, 4))
+       st.integers(0, 2**31 - 1), st.integers(1, 4), st.booleans())
 @settings(max_examples=40, deadline=None)
-def test_knn_block_xq_equals_bruteforce(nq, ni, k, seed, dup_every):
-    """Cross-set counting-select kernel (mega-cell tier) vs a direct
-    numpy argsort over the same (distance, id) order — including heavy
-    hash ties (dup_every clones hashes) and query ids present/absent
-    from the item side (self-exclusion by id)."""
+def test_knn_block_xq_equals_bruteforce(nq, ni, k, seed, dup_every, as_str):
+    """The one per-cell kNN kernel, cross-set (a hot cell's query salt
+    against one item chunk) vs a direct sort over the same (distance,
+    id) order — including heavy hash ties (dup_every clones hashes),
+    string ids, and query ids present in or absent from the item side
+    (self-exclusion by id)."""
     from kaza_lcms_spark.operators.knn import _knn_block_xq
 
     rng = np.random.default_rng(seed)
-    i_ids = np.sort(rng.choice(10_000, size=ni, replace=False)).astype(np.int64)
+    both = _knn_ids(rng, ni + nq, as_str)
+    i_ids = np.sort(rng.choice(both, size=ni, replace=False))
     # queries: some overlap the item id space, the rest are foreign
     n_over = min(max(1, nq // 2), ni)
-    q_ids = np.concatenate([
-        rng.choice(i_ids, size=n_over, replace=False),
-        rng.choice(np.arange(10_000, 10_000 + nq), size=nq - n_over,
-                   replace=False)]).astype(np.int64)
+    foreign = np.setdiff1d(both, i_ids)
+    q_ids = np.concatenate([rng.choice(i_ids, size=n_over, replace=False),
+                            rng.choice(foreign, size=nq - n_over,
+                                       replace=False)])
     pool = rng.integers(0, 2**62, size=max(1, ni // dup_every), dtype=np.int64)
     i_h = pool[rng.integers(0, len(pool), size=ni)]
     q_h = pool[rng.integers(0, len(pool), size=nq)]
 
-    out = _knn_block_xq(q_ids, q_h, i_ids, i_h, k, "qid")
-    got = {}
-    import pandas as pd
-    res = pd.concat(out) if out else pd.DataFrame(
-        {"qid": [], "neighbor_id": [], "hamming": []})
-    for r in res.itertuples():
-        got.setdefault(r.qid, []).append((r.hamming, r.neighbor_id))
+    got = _hamming_got(_knn_block_xq(q_ids, q_h, i_ids, i_h, k, "qid"), "qid")
+    assert got == _hamming_brute(q_ids, q_h, i_ids, i_h, k)
 
-    for qi, qh in zip(q_ids, q_h):
-        d = codec.hamming64(i_h, np.full(ni, qh, dtype=np.int64)).astype(np.int64)
-        mask = i_ids != qi
-        cand = sorted(zip(d[mask], i_ids[mask]))[:k]
-        want = [(int(dd), int(ii)) for dd, ii in cand]
-        assert sorted(got.get(qi, [])) == want, (qi, k)
+
+@given(st.integers(1, 12), st.integers(1, 8), st.integers(0, 2**31 - 1),
+       st.integers(1, 6), st.booleans())
+@settings(max_examples=60, deadline=None)
+@example(1, 3, 0, 1, True)
+@example(2, 5, 0, 1, True)
+@example(2, 1, 0, 1, False)
+def test_knn_block_within_set_equals_bruteforce(n, k, seed, dup_every, as_str):
+    """The cold-cell call: every item queries its own cell, excluding
+    itself — n ≤ k, one- and two-row cells, heavy ties, string ids."""
+    from kaza_lcms_spark.operators.knn import _knn_block
+
+    rng = np.random.default_rng(seed)
+    ids = _knn_ids(rng, n, as_str)
+    pool = rng.integers(0, 2**62, size=max(1, n // dup_every), dtype=np.int64)
+    h = pool[rng.integers(0, len(pool), size=n)]
+
+    got = _hamming_got(_knn_block(ids, h, np.arange(n), k, "qid"), "qid")
+    assert got == _hamming_brute(ids, h, ids, h, k)

@@ -143,6 +143,33 @@ def test_concurrent_rf_fits_identical_to_sequential(spark):
     assert {c for _, c, _ in a} == set(classes)
 
 
+def test_rf_models_independent_of_input_partitioning(spark):
+    """The fitted models depend on the training rows alone: the same
+    table repartitioned by the caller gives identical probabilities
+    (MLlib seeds bagging per partition index and row order)."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    n, classes = 2400, [1, 2, 3, 4]
+    feats = rng.normal(0, 1, (n, 3))
+    labels = np.repeat(classes, n // len(classes))
+    feats[:, 0] += labels * 0.5
+    rows = [(int(i), *[float(x) for x in feats[i]], int(labels[i]))
+            for i in range(n)]
+    train = spark.createDataFrame(
+        rows, "cell_id long, f0 double, f1 double, f2 double, "
+              "LANDCOVER long").cache()
+    fcols = ["f0", "f1", "f2"]
+
+    def probs(df):
+        out = P.primitives_to_collection(df, train, fcols, classes=classes,
+                                         n_trees=5)
+        return sorted((r["cell_id"], r["class"], r["prob"])
+                      for r in out.collect())
+
+    assert probs(train) == probs(train.repartition(7))
+
+
 def test_wide_assemblage_identical_to_tall(spark):
     """primitives_wide + assemble_max_prob_wide (zero-shuffle inference)
     must reproduce the tall union + window assemblage exactly, ties

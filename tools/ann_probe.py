@@ -16,10 +16,12 @@ Usage: python tools/ann_probe.py [n_vectors]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 DIM = 64
 N_LATENT = 64
@@ -240,7 +242,7 @@ def main() -> None:
             "pay; the knob stays available for corpora with broader",
             "cluster overlap.",
         ]
-    with open("/root/repo/BENCH/BASELINE.md", "a") as f:
+    with open(os.path.join(ROOT, "BENCH", "BASELINE.md"), "a") as f:
         f.write("\n".join(lines) + "\n")
     assert r_def[3] >= 0.85, f"recall {r_def[3]:.3f} below target at default nprobe"
     spark.stop()

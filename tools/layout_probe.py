@@ -24,9 +24,10 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-WORK = "/root/repo/.fixtures/layout_probe"
+WORK = os.path.join(ROOT, ".fixtures", "layout_probe")
 
 
 def merge_ranges(cells):
@@ -179,7 +180,7 @@ def main() -> None:
         "consider; at 10¹² rows the manifest level alone keeps the reader",
         "from opening footers outside the AOI's parent cells.",
     ]
-    with open("/root/repo/BENCH/BASELINE.md", "a") as f:
+    with open(os.path.join(ROOT, "BENCH", "BASELINE.md"), "a") as f:
         f.write("\n".join(lines) + "\n")
     print(f"plain {t_p:.2f}s live_rg {prgl}/{prg}; "
           f"clustered {t_c:.2f}s parts {len(sel_parts)}/{len(all_parts)} "

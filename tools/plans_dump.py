@@ -8,10 +8,12 @@ cell-keyed distance join, annotated.
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def fmt(df) -> str:
@@ -69,10 +71,11 @@ def main() -> None:
          "INSIDE each band before the union+distinct: the dedup exchange "
          "carries only verified (a,b,hamming) triples)",
          E.q_hamming_near_dup(spark, sf)),
-        ("Mega-cell block-grid kNN (broadcast-free third tier: item "
-         "hash-chunks × query salts meet in one pinned applyInPandas "
-         "group per pair, window merge keeps global top-k — one pinned "
-         "shuffle on (cell, chunk, salt) + the merge window exchange)",
+        ("Hot-cell block-grid kNN (every cell hot, 3 item hash-chunks × "
+         "4 query salts meet in one pinned applyInPandas group per pair, "
+         "window merge keeps global top-k — one pinned shuffle on (cell, "
+         "chunk, salt) + the merge window exchange; cold cells: one "
+         "groupBy kernel per cell)",
          E.q_knn_per_cell_mega(spark, sf)),
     ]
     from kaza_lcms_spark.operators import composite_pipeline as CP
@@ -109,7 +112,7 @@ def main() -> None:
            "", "Generated by `python tools/plans_dump.py`.", ""]
     for title, df in sections:
         out += [f"## {title}", "", "```", fmt(df).rstrip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
     spark.stop()

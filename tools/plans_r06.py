@@ -12,7 +12,8 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def fmt(df) -> str:
@@ -25,7 +26,7 @@ def fmt(df) -> str:
 def main() -> None:
     suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
     only = set(sys.argv[2:])
-    out_dir = "/root/repo/plans/r06"
+    out_dir = os.path.join(ROOT, "plans", "r06")
     os.makedirs(out_dir, exist_ok=True)
 
     from pyspark.sql import functions as F

@@ -34,7 +34,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SPARK_SUBMIT = "/opt/spark/bin/spark-submit"
 
@@ -58,8 +59,8 @@ def _run_job(fx: str, out: str, *extra: str) -> tuple[int, dict | None, float]:
            "--driver-memory", "8g",
            "--conf", "spark.ui.enabled=false",
            "--conf", "spark.sql.shuffle.partitions=32",
-           "--py-files", "/root/repo/dist/kaza_lcms_spark.zip",
-           "/root/repo/jobs/landcover_job.py",
+           "--py-files", os.path.join(ROOT, "dist", "kaza_lcms_spark.zip"),
+           os.path.join(ROOT, "jobs", "landcover_job.py"),
            "--fixtures", fx, "--out", out,
            "--partitions-per-commit", "1", *extra]
     t0 = time.time()
@@ -73,7 +74,7 @@ def _run_job(fx: str, out: str, *extra: str) -> tuple[int, dict | None, float]:
 
 
 def main() -> None:
-    subprocess.run([sys.executable, "/root/repo/tools/package.py"],
+    subprocess.run([sys.executable, os.path.join(ROOT, "tools", "package.py")],
                    check=True, capture_output=True)
     tmp = tempfile.mkdtemp(prefix="resume-probe-")
     try:
@@ -141,7 +142,7 @@ def main() -> None:
             "rewritten). The crashed run's uncommitted files are never",
             "readable — read_table only opens manifest-named files.",
         ]
-        with open("/root/repo/BENCH/BASELINE.md", "a") as f:
+        with open(os.path.join(ROOT, "BENCH", "BASELINE.md"), "a") as f:
             f.write("\n".join(lines) + "\n")
         print(f"resume probe OK: {n_rows} cells, skipped {s2['partitions_skipped']}, "
               f"walls {w1:.0f}/{w2:.0f}/{w3:.0f}s")

@@ -20,11 +20,13 @@ Usage: python tools/rf_probe.py [n_rows]
 
 from __future__ import annotations
 
+import os
 import sys
 import threading
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
@@ -112,7 +114,7 @@ def main() -> None:
         "the distributed stages lengthen while driver segments stay",
         "constant, pushing the knee (and the ceiling) higher.",
     ]
-    with open("/root/repo/BENCH/BASELINE.md", "a") as f:
+    with open(os.path.join(ROOT, "BENCH", "BASELINE.md"), "a") as f:
         f.write("\n".join(lines) + "\n")
     print(f"serial_frac {serial_frac:.2f}, sweep " +
           ", ".join(f"c{c}={t:.2f}s" for c, t in sweep.items()) +

@@ -7,10 +7,12 @@ Usage: python tools/scale_probe.py [n_images]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
@@ -118,7 +120,7 @@ def main() -> None:
         "constant density is a finer cell level, at constant cell size it",
         "is the salted broadcast path (plans/salting.py).",
     ]
-    with open("/root/repo/BENCH/BASELINE.md", "a") as f:
+    with open(os.path.join(ROOT, "BENCH", "BASELINE.md"), "a") as f:
         f.write("\n".join(lines) + "\n")
     print(f"appended scale probe: assign={t_assign:.2f}s "
           f"decode={t_decode:.2f}s knn={t_knn:.2f}s")

@@ -24,6 +24,8 @@ import subprocess
 import sys
 import time
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def run_bench(cpus: int, pin: str | None, n_images: int, n_flag: int,
               repeat: int = 3) -> dict:
@@ -34,15 +36,15 @@ def run_bench(cpus: int, pin: str | None, n_images: int, n_flag: int,
     cmd = [sys.executable, "bench.py"]
     if pin:
         cmd = ["taskset", "-c", pin] + cmd
-    out = subprocess.run(cmd, env=env, cwd="/root/repo",
+    out = subprocess.run(cmd, env=env, cwd=ROOT,
                          capture_output=True, text=True, timeout=2400)
     line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
     return json.loads(line)
 
 
+# run with cwd=ROOT: `python -c` puts the working directory on sys.path
 _FLAGSHIP_SNIPPET = """
 import sys, time
-sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F
 from kaza_lcms_spark import datagen
 from kaza_lcms_spark.session import get_spark
@@ -67,7 +69,7 @@ spark.stop()
 def measure_flagship(cpus: int, pin: str, n_flag: int) -> float:
     cmd = ["taskset", "-c", pin, sys.executable, "-c", _FLAGSHIP_SNIPPET,
            str(n_flag), str(cpus)]
-    out = subprocess.run(cmd, cwd="/root/repo", capture_output=True,
+    out = subprocess.run(cmd, cwd=ROOT, capture_output=True,
                          text=True, timeout=1200)
     line = [ln for ln in out.stdout.splitlines() if ln.startswith("FLAGSHIP_SEC")]
     return float(line[-1].split()[1])
@@ -217,8 +219,8 @@ def main() -> None:
         "at a time: scale_probe, layout_probe, skew_probe, ann_probe,",
         "rf_probe, thin_probe, resume_probe.",
     ]
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open("/root/repo/BENCH/BASELINE.md", "w") as f:
+    os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
+    with open(os.path.join(ROOT, "BENCH", "BASELINE.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote BENCH/BASELINE.md; primary flagship efficiency = {eff_primary:.3f}")
 

@@ -31,7 +31,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 RADIUS = 0.01
 
@@ -151,7 +152,7 @@ def main() -> None:
         "decision), so no exact parallelization can beat the chain —",
         "assign hash/random ids when thinning priority is free to choose.",
     ]
-    with open("/root/repo/BENCH/BASELINE.md", "a") as f:
+    with open(os.path.join(ROOT, "BENCH", "BASELINE.md"), "a") as f:
         f.write("\n".join(lines) + "\n")
     print(f"{n:,}-point arm: rounds {n_rounds}, kept {n_kept}, {wall:.1f}s; "
           f"adversarial: rounds {a_rounds}, kept {n_akept}, {awall:.1f}s")
