@@ -122,18 +122,6 @@ def _gen_pixel_batch(idx: np.ndarray, size: int) -> np.ndarray:
     return img.astype(np.uint8)
 
 
-def _phash_batch(px: np.ndarray) -> np.ndarray:
-    """Vectorized phash64 for a (n, s, s) stack, s divisible by 8.
-
-    Matches kernels.codec.phash64 bit-for-bit (tested)."""
-    n, h, w = px.shape
-    small = px.astype(np.float64).reshape(n, 8, h // 8, 8, w // 8).mean(axis=(2, 4))
-    med = np.median(small.reshape(n, 64), axis=1)
-    bits = (small.reshape(n, 64) > med[:, None]).astype(np.uint64)
-    weights = np.uint64(1) << np.arange(63, -1, -1, dtype=np.uint64)
-    return (bits * weights[None, :]).sum(axis=1, dtype=np.uint64).astype(np.int64)
-
-
 def generate_images(n: int, chunk: int = 100_000) -> pa.Table:
     """Chunked to bound peak memory: pixel stacks for 100k 64×64 images
     are ~2.5 GB; generating 10⁶+ images in one batch would hold tens of
@@ -167,7 +155,7 @@ def _generate_images_chunk(idx: np.ndarray) -> pa.Table:
         if len(sel) == 0:
             continue
         px = _gen_pixel_batch(idx[sel], int(s))
-        phash[sel] = _phash_batch(px)
+        phash[sel] = codec.phash64_batch(px)
         for j, k in enumerate(sel):
             blobs[k] = codec.encode(px[j], str(fmt[k]))
 

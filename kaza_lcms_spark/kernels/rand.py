@@ -46,17 +46,3 @@ def hash_u64(key, seed: int = 0) -> np.ndarray:
 def uniform(key, seed: int = 0) -> np.ndarray:
     """Deterministic U[0,1) per key: top 53 bits of the hash / 2^53."""
     return (hash_u64(key, seed) >> np.uint64(11)).astype(np.float64) / float(1 << 53)
-
-
-def uniform_str(keys, seed: int = 0) -> np.ndarray:
-    """Deterministic U[0,1) for string keys (FNV-1a fold then mix)."""
-    out = np.empty(len(keys), dtype=np.uint64)
-    mask = (1 << 64) - 1
-    for i, s in enumerate(keys):
-        h = 0xCBF29CE484222325
-        for b in s.encode("utf-8"):
-            h = ((h ^ b) * 0x100000001B3) & mask
-        out[i] = h
-    return (mix64(out ^ mix64(np.full(len(keys), seed, dtype=np.uint64))) >> np.uint64(11)).astype(
-        np.float64
-    ) / float(1 << 53)

@@ -10,10 +10,9 @@ Reference trace: /root/reference/src/utils/s2process.py:17-154 (scan +
 mask pipeline :43-99, rename :131, indices via covariates.py:324-338,
 percentile reduce :137-139, harmonic via harmonics.py:79-124, stack :144).
 
-Physical shape: the mask/morphology stage shuffles once on (ts, ix, iy)
-— per-image focal windows; the two reductions share ONE shuffle each on
-cell_id with Catalyst partial aggregation; the final stack is a cell-keyed
-join of two small-side aggregates (AQE broadcasts the harmonic side).
+Physical shape: the mask/morphology stage shuffles once on (ts, tile)
+— per-image focal windows; the two reductions share ONE hash-agg on
+cell_id (see build_composite).
 """
 
 from __future__ import annotations
@@ -29,16 +28,15 @@ BANDS = ["blue", "green", "red", "nir", "swir1", "swir2"]
 
 
 def add_cloud_mask(ts_df: DataFrame, threshold: float = 60.0,
-                   erode_r: int = 1, grow_r: int = 1,
-                   tiled: bool = False) -> DataFrame:
+                   erode_r: int = 1, grow_r: int = 1) -> DataFrame:
     """Cloud mask: probability threshold (reference CLD_PRB_THRESH,
     src/utils/s2process.py:8,43) then morphological open+grow per image
     date (src/utils/s2process.py:84-88). Emits is_cloud ∈ {0,1}.
-    ``tiled`` selects the one-shuffle halo-tile morphology (identical
-    output, tested) instead of the relational 4-shuffle plan."""
+    The morphology is the one-shuffle halo-tile kernel
+    (focal.open_grow_tiled; equal to the relational erode-then-dilate,
+    tested)."""
     m = ts_df.withColumn("is_cloud", (F.col("cloud_prob") > threshold).cast("int"))
-    op = FO.open_grow_tiled if tiled else FO.open_grow_mask
-    return op(m, "is_cloud", erode_r, grow_r, group_cols=("ts",))
+    return FO.open_grow_tiled(m, "is_cloud", erode_r, grow_r, group_cols=("ts",))
 
 
 def apply_mask(ts_df: DataFrame, bands: list[str] = BANDS) -> DataFrame:
@@ -82,11 +80,11 @@ def build_composite(ts_df: DataFrame,
     group instead of buffering every observation — the multi-decade
     archive path; rank error ≤ 1/accuracy, tested vs exact).
 
-    Physical shape: tiled morphology is ONE shuffle on (ts, tile); both
+    Physical shape: the cloud mask is ONE shuffle on (ts, tile); both
     reductions share ONE hash-agg on cell_id (percentiles + Gram sums in
     the same groupBy — no diamond recompute of the masked input, no
     stack join). Two shuffles end to end."""
-    masked = apply_mask(add_cloud_mask(ts_df, tiled=True), bands)
+    masked = apply_mask(add_cloud_mask(ts_df), bands)
     feat = add_indices(masked)
     feat = feat.withColumn("t_frac", F.col("doy") / F.lit(365.0))
     value_cols = list(bands) + list(index_cols)

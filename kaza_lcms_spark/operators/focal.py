@@ -10,16 +10,18 @@ Re-grounds sig-gis/kaza-lcms neighborhood ops:
 * W5/W6 slope/aspect from DEM (src/utils/covariates.py:209-223,
   src/misc/sentinel1.py:79-143) → central differences over neighbors.
 
-Two physical strategies:
-* **Relational offset joins** (default): a (2r+1)²-offset union on integer
-  grid coords, then one hash-agg keyed by the home cell. JVM-only, scales
-  as an equi-join on the cell key; erosion/dilation reduce to counting
-  set neighbors (sum == window ↔ all; sum > 0 ↔ any), so they are
-  SQL-replayable for the oracle gate.
-* **Halo-tile numpy kernels** (`*_tiled`): group cells by a coarse parent
-  cell, ship each tile + 1-cell halo to applyInPandas, run dense numpy
-  sliding-window ops, emit home cells only. Wins when radius or band
-  count is large (one shuffle instead of (2r+1)² join fan-out).
+Focal statistics, erosion and dilation are relational offset joins: a
+(2r+1)²-offset union on integer grid coords, then one hash-agg keyed by
+the home cell. JVM-only, it scales as an equi-join on the cell key;
+erosion/dilation reduce to counting set neighbors (sum == window ↔ all;
+sum > 0 ↔ any), so they are SQL-replayable for the oracle gate.
+
+The cloud-mask open+grow runs as one halo-tile numpy kernel instead
+(:func:`open_grow_tiled`): cells group by a coarse tile, each tile ships
+with its halo to applyInPandas for dense sliding-window min/max, and
+only home cells are emitted — one shuffle in place of the relational
+erode-then-dilate's four, which stays as its tested reference
+(:func:`open_grow_mask`).
 """
 
 from __future__ import annotations
@@ -28,7 +30,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 
 def _offsets(radius: int) -> list[tuple[int, int]]:
@@ -97,9 +99,10 @@ def open_grow_mask(cells: DataFrame, mask_col: str,
     100 m buffer) — reference focal_min(2).focal_max(BUFFER*2/20),
     src/utils/s2process.py:84-88.
 
-    Relational strategy: 2 × ((2r+1)²-union → hash-agg → join) = 4
-    shuffles carrying up to 18× the rows. SQL-replayable (the oracle
-    gate); for the hot composite path use open_grow_tiled (ONE shuffle)."""
+    Relational form: 2 × ((2r+1)²-union → hash-agg → join) = 4
+    shuffles carrying up to 18× the rows, built from the oracle-gated
+    erode/dilate. It is the reference that open_grow_tiled, the plan the
+    composite pipeline runs (ONE shuffle), is tested against."""
     return dilate(erode(cells, mask_col, erode_r, group_cols=group_cols),
                   mask_col, grow_r, group_cols=group_cols)
 
@@ -305,76 +308,3 @@ def lee_speckle(cells: DataFrame, band: str, radius: int = 1,
     k = v / (v + m * m * F.lit(cu2) + F.lit(1e-12))
     return f.withColumn(f"{band}_lee", m + k * (F.col(band) - m)) \
             .drop(f"focal_mean_{band}", f"focal_var_{band}")
-
-
-# ------------------------------------------------------- halo-tile variant
-
-def focal_mean_tiled(cells: DataFrame, value_col: str, radius: int,
-                     tile_bits: int = 5,
-                     ix_col: str = "ix", iy_col: str = "iy") -> DataFrame:
-    """Halo-tile numpy focal mean: cells grouped into 2^bits-square tiles,
-    each replicated to neighbor tiles it halos; dense sliding-window sums
-    via cumulative-sum trick per tile. Same results as focal_agg(mean)
-    (tested); preferable when radius is large."""
-    ts = 1 << tile_bits
-    r = radius
-
-    rep_schema = StructType([
-        StructField(ix_col, LongType()), StructField(iy_col, LongType()),
-        StructField("_v", DoubleType()),
-        StructField("tx", LongType()), StructField("ty", LongType()),
-    ])
-
-    def replicate(it):
-        for b in it:
-            if not len(b):
-                continue
-            ix = b[ix_col].to_numpy(); iy = b[iy_col].to_numpy()
-            v = b["_v"].to_numpy()
-            outs = []
-            for dx in (-1, 0, 1):
-                for dy in (-1, 0, 1):
-                    tx = (ix + dx * r) >> tile_bits
-                    ty = (iy + dy * r) >> tile_bits
-                    outs.append(pd.DataFrame({ix_col: ix, iy_col: iy, "_v": v,
-                                              "tx": tx, "ty": ty}))
-            rep = pd.concat(outs).drop_duplicates([ix_col, iy_col, "tx", "ty"])
-            yield rep
-
-    out_schema = StructType([
-        StructField(ix_col, LongType()), StructField(iy_col, LongType()),
-        StructField(f"focal_mean_{value_col}", DoubleType()),
-    ])
-
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty = key
-        x0, y0 = tx * ts - r, ty * ts - r
-        w = ts + 2 * r
-        grid_v = np.zeros((w, w)); grid_n = np.zeros((w, w))
-        gx = pdf[ix_col].to_numpy() - x0; gy = pdf[iy_col].to_numpy() - y0
-        m = (gx >= 0) & (gx < w) & (gy >= 0) & (gy < w)
-        grid_v[gx[m], gy[m]] = pdf["_v"].to_numpy()[m]
-        grid_n[gx[m], gy[m]] = 1.0
-        # sliding-window sums via 2-D cumsum (inclusive prefix)
-        def winsum(a):
-            c = np.cumsum(np.cumsum(np.pad(a, ((1, 0), (1, 0))), axis=0), axis=1)
-            k = 2 * r + 1
-            return (c[k:, k:] - c[:-k, k:] - c[k:, :-k] + c[:-k, :-k])
-        sv, sn = winsum(grid_v), winsum(grid_n)
-        hx = gx[m] - r; hy = gy[m] - r  # window-sum grid is offset by r
-        home = (hx >= 0) & (hx < ts) & (hy >= 0) & (hy < ts) \
-            & ((pdf[ix_col].to_numpy()[m] >> tile_bits) == tx) \
-            & ((pdf[iy_col].to_numpy()[m] >> tile_bits) == ty)
-        hxx, hyy = hx[home], hy[home]
-        n = sn[hxx, hyy]
-        return pd.DataFrame({
-            ix_col: pdf[ix_col].to_numpy()[m][home],
-            iy_col: pdf[iy_col].to_numpy()[m][home],
-            f"focal_mean_{value_col}": sv[hxx, hyy] / np.maximum(n, 1.0),
-        })
-
-    from ..plans.salting import pin_kernel_partitions
-    rep = cells.select(ix_col, iy_col, F.col(value_col).alias("_v")) \
-               .mapInPandas(replicate, rep_schema)
-    return (pin_kernel_partitions(rep, "tx", "ty")
-            .groupBy("tx", "ty").applyInPandas(kernel, out_schema))

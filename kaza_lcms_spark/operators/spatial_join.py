@@ -23,8 +23,9 @@ Physical strategy (BASELINE.json::north_star):
    is a map-side broadcast join, the same shape Catalyst picks for small
    dimension tables, with a cell-keyed index as its hash table. Skewed
    cells (borders/rivers) cannot hurt a narrow map — skew handling
-   matters only for the *keyed* operators downstream (distance join /
-   kNN), which salt explicitly.
+   matters only for the *keyed* operators downstream: AQE splits the
+   distance join's skewed sort-merge join, and per-cell kNN salts its
+   hot cells explicitly (plans.salting).
 3. **Exact PIP** — even-odd ray casting (kernels.geom.points_in_polygon),
    lowest-unit_id tie-break on shared borders so output is row-for-row
    deterministic (reference parity requirement).
@@ -269,57 +270,6 @@ def assign_tiles(spark: SparkSession, points_df: DataFrame,
         _assign_kernel(spark, index, out_schema.names), out_schema)
 
 
-def assign_tiles_codegen(points_df: DataFrame, index: geom.PolygonIndex,
-                         lon_col: str = "lon", lat_col: str = "lat",
-                         out_col: str = "unit_id") -> DataFrame:
-    """Second physical strategy for the PIP join: COMPILE the polygon set
-    into a Catalyst CASE chain of half-plane tests (convex polygons only)
-    — the whole join runs inside whole-stage codegen, zero Python, zero
-    broadcast objects. Pick this when the polygon set is small (~≤100
-    convex rings; expression size grows linearly); fall back to the
-    broadcast cell-keyed index ``mapInArrow`` kernel (assign_tiles)
-    otherwise.
-    Tie-break identical to PolygonIndex.probe (lowest unit_id wins;
-    tested equivalent).
-
-    Measured (32-core VM, 5M rows, 12 polygons): codegen 1.27M rows/s vs
-    numpy probe 1.47M rows/s — the Arrow-batched numpy probe already
-    saturates; codegen wins only where Python worker startup or IPC is
-    the constraint, and loses as the CASE chain grows with |polygons|."""
-    from ..plans import oracles as O
-
-    whens = []
-    order = sorted(range(len(index.unit_ids)), key=lambda k: index.unit_ids[k])
-    for k in order:
-        xs, ys = index.rings_x[k], index.rings_y[k]
-        # drop consecutive collinear vertices, then require convex CCW
-        keep = []
-        n = len(xs)
-        for i in range(n):
-            x0, y0 = xs[i - 1], ys[i - 1]
-            x1, y1 = xs[i], ys[i]
-            x2, y2 = xs[(i + 1) % n], ys[(i + 1) % n]
-            cr = (x1 - x0) * (y2 - y0) - (y1 - y0) * (x2 - x0)
-            if abs(cr) > 1e-9:   # near-collinear (midpoint FP noise) drops
-                keep.append(i)
-        cxs, cys = xs[keep], ys[keep]
-        m = len(cxs)
-        for i in range(m):
-            x1, y1 = cxs[i], cys[i]
-            x2, y2 = cxs[(i + 1) % m], cys[(i + 1) % m]
-            x3, y3 = cxs[(i + 2) % m], cys[(i + 2) % m]
-            if (x2 - x1) * (y3 - y1) - (y2 - y1) * (x3 - x1) <= 0:
-                raise ValueError(
-                    f"unit {index.unit_ids[k]} is not strictly convex CCW — "
-                    "use assign_tiles (index probe) instead")
-        whens.append(
-            f"WHEN {O.convex_inside_sql(lon_col, lat_col, cxs, cys)} "
-            f"THEN {int(index.unit_ids[k])}L")
-    case = "CASE " + " ".join(whens) + " ELSE NULL END"
-    return (points_df.withColumn(out_col, F.expr(case))
-            .where(F.col(out_col).isNotNull()))
-
-
 def assign_images_fused(spark: SparkSession, images_df: DataFrame,
                         index: geom.PolygonIndex) -> DataFrame:
     """Single-pass flagship join over contract-shaped images: footprint
@@ -332,11 +282,17 @@ def assign_images_fused(spark: SparkSession, images_df: DataFrame,
     the scan with zero shuffles; per-batch numpy cost is ~1 ms / 4k
     rows, so the pipeline is I/O-bound, exactly as it should be.
 
+    The scan splits by the size of the whole file, payload included, but
+    the kernel reads only ``image_id``: like :func:`zonal_counts_fused`,
+    the stage coalesces to one task per core, so the per-task Python
+    round-trip is paid once per core rather than once per 8 MB split.
+
     Returns (image_id, lon, lat, cell_id, unit_id).
     """
     out_schema = StructType([images_df.schema["image_id"], *_DERIVED])
-    return images_df.select("image_id").mapInArrow(
-        _assign_kernel(spark, index, out_schema.names), out_schema)
+    return images_df.select("image_id") \
+        .coalesce(spark.sparkContext.defaultParallelism) \
+        .mapInArrow(_assign_kernel(spark, index, out_schema.names), out_schema)
 
 
 def zonal_counts_fused(spark: SparkSession, images_df: DataFrame,
@@ -385,18 +341,16 @@ def zonal_stats(assigned: DataFrame, value_cols: tuple[str, ...] = (),
 # -------------------------------------------------------------- distance join
 
 def _halo(points_df: DataFrame, radius_deg: float, id_col: str,
-          lon_col: str, lat_col: str, cell_level: int | None,
+          lon_col: str, lat_col: str,
           keep_home: bool) -> tuple[DataFrame, DataFrame]:
     """The halo step of :func:`distance_join` and :func:`thin_points`.
 
-    Returns ``pts`` (pid, px, py, home: the point's cell at
-    ``cell_level``, by default the largest level whose cells are at
-    least ``radius_deg`` tall) and ``rep``: each point once per distinct
-    cell of its home's 3×3 neighbourhood, as (pid, px, py, [home,] cell).
+    Returns ``pts`` (pid, px, py, home: the point's cell at the largest
+    level whose cells are at least ``radius_deg`` tall) and ``rep``: each
+    point once per distinct cell of its home's 3×3 neighbourhood, as
+    (pid, px, py, [home,] cell).
     """
-    if cell_level is None:
-        # largest level whose cell height >= radius (lat degrees)
-        cell_level = max(0, min(24, int(np.floor(np.log2(180.0 / max(radius_deg, 1e-9))))))
+    level = max(0, min(24, int(np.floor(np.log2(180.0 / max(radius_deg, 1e-9))))))
 
     # NOTE: this encode stays a pandas UDF deliberately (r6): the JVM
     # morton algebra (with_cell) was measured SLOWER here (0.69 s ->
@@ -408,7 +362,7 @@ def _halo(points_df: DataFrame, radius_deg: float, id_col: str,
     # barrier, so the JVM encode wins there.
     @F.pandas_udf(LongType())
     def enc(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(grid.encode(lon.to_numpy(), lat.to_numpy(), cell_level))
+        return pd.Series(grid.encode(lon.to_numpy(), lat.to_numpy(), level))
 
     pts = points_df.select(
         F.col(id_col).alias("pid"), F.col(lon_col).alias("px"), F.col(lat_col).alias("py")
@@ -435,37 +389,24 @@ def _halo(points_df: DataFrame, radius_deg: float, id_col: str,
 
 def distance_join(points_df: DataFrame, radius_deg: float,
                   id_col: str = "pt_id",
-                  lon_col: str = "lon", lat_col: str = "lat",
-                  cell_level: int | None = None,
-                  salt: int = 1) -> DataFrame:
+                  lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
     """All unordered pairs (a < b) within planar `radius_deg` degrees.
 
     Re-grounds the reference's ``ee.Join.saveAll`` withinDistance self-join
-    (src/utils/sampling.py:12-28). Physical plan: pick a cell level whose
-    cell size ≥ radius → replicate each point to its 3×3 neighbor cells
-    (halo) → equi-join home×replica on cell → exact distance filter →
-    dedupe pair (a<b keeps one orientation; same pair may match in several
-    cells, distinct() collapses). The shuffle key is the cell id; `salt`
-    > 1 splits every cell's LEFT rows into `salt` hash buckets and
-    replicates the right (halo) side once per bucket, so no task owns a
-    whole hot river/border cell — the explicit planner-side skew lever
-    (AQE skew-join also covers this at runtime). Results are identical
-    for any salt (tested); cost is a ×salt replication of the halo side.
+    (src/utils/sampling.py:12-28). Physical plan: take the largest cell
+    level whose cells are at least `radius_deg` tall → replicate each
+    point to its 3×3 neighbor cells (halo) → equi-join home×replica on
+    cell → exact distance filter, keeping the a < b orientation. The
+    shuffle key is the cell id; a hot river/border cell is a skewed
+    sort-merge join, which AQE's skew-join splitting (on in
+    session.get_spark) divides at runtime.
     """
-    pts, rep = _halo(points_df, radius_deg, id_col, lon_col, lat_col, cell_level,
+    pts, rep = _halo(points_df, radius_deg, id_col, lon_col, lat_col,
                      keep_home=False)
     right = (rep
              .withColumnRenamed("pid", "pid_b")
              .withColumnRenamed("px", "px_b").withColumnRenamed("py", "py_b"))
-    left = pts.withColumnRenamed("home", "cell")
-    if salt > 1:
-        left = left.withColumn("bkt", F.pmod(F.xxhash64("pid"), F.lit(salt)))
-        right = right.withColumn(
-            "bkt", F.explode(F.sequence(F.lit(0).cast("long"),
-                                        F.lit(salt - 1).cast("long"))))
-        joined = left.join(right, on=["cell", "bkt"])
-    else:
-        joined = left.join(right, on="cell")
+    joined = pts.withColumnRenamed("home", "cell").join(right, on="cell")
     dx = F.col("px") - F.col("px_b")
     dy = F.col("py") - F.col("py_b")
     dist2 = dx * dx + dy * dy
@@ -554,7 +495,7 @@ def thin_points(points_df: DataFrame, radius_deg: float,
     independent of partitioning. Chains longer than one halo radius may
     deviate from a global greedy — deterministic either way.
     """
-    pts, rep = _halo(points_df, radius_deg, id_col, lon_col, lat_col, None,
+    pts, rep = _halo(points_df, radius_deg, id_col, lon_col, lat_col,
                      keep_home=True)
     out_schema = StructType([StructField("pid", pts.schema["pid"].dataType)])
     r = radius_deg

@@ -10,7 +10,7 @@ build), and every scoring aggregate is a partial-combining hash-agg.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 M31 = 2147483647
@@ -43,18 +43,6 @@ def token_tid(col) -> F.Column:
 def token_tid_sql(col: str = "token") -> str:
     """ANSI/DuckDB replay of token_tid — identical integers per token."""
     return f"CAST('0x' || substring(md5({col}), 1, 12) AS BIGINT)"
-
-
-def token_dictionary(tok: DataFrame) -> DataFrame:
-    """(token, tid) — dense ids by lexicographic token order.
-
-    TEST-SCALE ONLY: the dense_rank runs over a single global ordering
-    (one-partition exchange), which is a scale-killer on a web corpus.
-    The production id path is token_tid (hash-based, shuffle-free);
-    this dictionary remains for oracle variants that need dense ids."""
-    w = Window.orderBy("token")
-    return (tok.select("token").distinct()
-            .withColumn("tid", F.dense_rank().over(w)))
 
 
 def quality_scores(df: DataFrame, text_col: str = "text",

@@ -52,8 +52,7 @@ def split_hot_cold(df: DataFrame, hot: list[int],
     return hot_df, cold_df
 
 
-def pin_kernel_partitions(df: DataFrame, *cols,
-                          n_partitions: int | None = None) -> DataFrame:
+def pin_kernel_partitions(df: DataFrame, *cols) -> DataFrame:
     """Explicit-N repartition on the kernel's grouping columns —
     REPARTITION_BY_NUM, which AQE must preserve.
 
@@ -66,17 +65,13 @@ def pin_kernel_partitions(df: DataFrame, *cols,
     wall-clock). The downstream groupBy reuses the pinned
     HashPartitioning, so this adds no extra shuffle.
 
-    ``n_partitions`` overrides the task count for kernels whose per-task
-    cost profile differs from the session's byte-sized shuffle tuning;
-    by default the session's ``spark.sql.shuffle.partitions`` is used,
-    falling back to ``defaultParallelism`` when that conf is non-numeric
-    (e.g. ``"auto"`` on platforms with adaptive defaults)."""
-    n_part = n_partitions
-    if n_part is None:
-        raw = df.sparkSession.conf.get("spark.sql.shuffle.partitions", None)
-        try:
-            n_part = int(raw)
-        except (TypeError, ValueError):
-            n_part = df.sparkSession.sparkContext.defaultParallelism
+    The task count is the session's ``spark.sql.shuffle.partitions``,
+    or ``defaultParallelism`` when that conf is non-numeric (e.g.
+    ``"auto"`` on platforms with adaptive defaults)."""
+    raw = df.sparkSession.conf.get("spark.sql.shuffle.partitions", None)
+    try:
+        n_part = int(raw)
+    except (TypeError, ValueError):
+        n_part = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n_part, *[F.col(c) if isinstance(c, str) else c
                                     for c in cols])

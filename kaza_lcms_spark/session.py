@@ -9,7 +9,7 @@ are Spark configs set once here:
   batches (BASELINE.json::input_hint forbids per-row Python UDFs).
 * AQE on, incl. skew-join splitting — the runtime half of the skew story
   (border/river hot cells); explicit salting is the planner half
-  (operators/spatial_join.py).
+  (plans/salting.py).
 * Arrow batch size bounded — image `bytes` payloads inflate batches;
   64 MiB-ish batches at 10 KiB/image ≈ 6k rows, so cap records per batch.
 """
@@ -22,6 +22,9 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 ARROW_MAX_RECORDS = 4096
+#: the directory that holds the package: a checkout root, or the zip
+#: under ``spark-submit --py-files``
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 _ALLOC_FILE: list[str | None] = []  # memo: extract once per process
@@ -99,6 +102,14 @@ def get_spark(
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # Python workers import the engine from the driver's tree: its
+        # parent goes on their path, and their working directory, which
+        # Python would put first, does not (PYTHONSAFEPATH). Otherwise a
+        # session started from another directory fails in its first UDF
+        # (no module kaza_lcms_spark), and one started from another
+        # checkout runs that checkout's code in the workers.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
     )
     alloc = _allocation_file()
     if alloc is not None:

@@ -39,17 +39,8 @@ def test_unmasked_composite_is_corrupted(ts):
 
 
 def test_percentiles_match_numpy_on_masked_series(ts, composite):
-    pdf = ts.where(F.col("cell_id").isin(
-        [r["cell_id"] for r in ts.select("cell_id").distinct().limit(5).collect()]
-    )).toPandas()
     got = {r["cell_id"]: r for r in composite.collect()}
-    for cid, grp in pdf.groupby("cell_id"):
-        # replicate mask: threshold only approximates the engine (engine
-        # also erodes/dilates); recompute engine mask via cloud_prob
-        # threshold + same morphology is complex — instead verify against
-        # the engine's own masked rows pulled back from Spark
-        pass
-    # direct check: p50 equals numpy median of non-null masked values
+    # p50 equals the numpy median of the engine's own masked values
     masked = CP.apply_mask(CP.add_cloud_mask(ts)).select("cell_id", "nir").toPandas()
     for cid, grp in list(masked.groupby("cell_id"))[:10]:
         vals = grp["nir"].dropna().to_numpy()

@@ -145,16 +145,6 @@ def test_hamming_banded_equals_bruteforce(spark):
         DD.hamming_near_dup_banded(sig64, 8, bands=8)
 
 
-def test_token_dictionary_dense_ids(spark):
-    """Test-scale dense-rank dictionary (kept as the oracle-friendly
-    variant; production path is token_tid): lexicographic dense ids."""
-    df = spark.createDataFrame(
-        [(0, "b a"), (1, "c a")], ["doc_id", "text"])
-    tok = T.tokens(df)
-    got = {r["token"]: r["tid"] for r in T.token_dictionary(tok).collect()}
-    assert got == {"a": 1, "b": 2, "c": 3}
-
-
 def test_token_tid_matches_duckdb(spark):
     """The Spark token_tid expression and its SQL replay string produce
     identical integers (the whole oracle strategy rests on this)."""

@@ -122,18 +122,6 @@ def test_slope_aspect_on_plane(spark):
     assert r["slope"] == pytest.approx(np.arctan(np.hypot(2, 3)))
 
 
-def test_focal_mean_tiled_equals_relational(spark, grid_df):
-    df, mask, val, n = grid_df
-    for radius in (1, 3):
-        a = {(r["ix"], r["iy"]): r["focal_mean_v"]
-             for r in FO.focal_agg(df, "v", radius=radius, stats=("mean",)).collect()}
-        b = {(r["ix"], r["iy"]): r["focal_mean_v"]
-             for r in FO.focal_mean_tiled(df, "v", radius=radius, tile_bits=4).collect()}
-        assert set(a) == set(b)
-        for k in a:
-            assert a[k] == pytest.approx(b[k]), (k, radius)
-
-
 def test_lee_speckle_smooths(spark, grid_df):
     df, mask, val, n = grid_df
     out = FO.lee_speckle(df, "v")

@@ -200,11 +200,6 @@ def test_uniform_deterministic_and_uniform():
     assert hist.min() > 4000 and hist.max() < 6000
 
 
-def test_uniform_str_stable():
-    u = rand.uniform_str(["img_0", "img_1", "img_0"], seed=1)
-    assert u[0] == u[2] and u[0] != u[1]
-
-
 # ---------------------------------------------------------------- codec
 
 def _mk_img(rng, h, w, smooth=False):

@@ -122,6 +122,16 @@ def test_composite_build_is_two_shuffles(spark, fixture_dir):
     assert "SinglePartition" not in plan, plan
 
 
+def test_cloud_mask_is_one_shuffle(spark, fixture_dir):
+    """The cloud mask has one plan, the halo-tile morphology: one
+    Exchange, where the relational erode-then-dilate needs four."""
+    from kaza_lcms_spark.operators import composite_pipeline as CP
+    ts = (spark.read.parquet(fixture_dir + "/s2_timeseries.parquet")
+          .where(F.col("cell_id") >= -1))
+    plan = plan_of(CP.add_cloud_mask(ts))
+    assert plan.count("Exchange") == 1, plan
+
+
 def test_session_defaults(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"

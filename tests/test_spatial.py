@@ -66,22 +66,6 @@ def test_distance_join_vs_bruteforce(spark, truth_lonlat):
     assert len(got) > 0
 
 
-def test_distance_join_salted_equals_unsalted(spark, truth_lonlat):
-    """The explicit skew lever must not change results: salt=4 splits each
-    cell's left rows into hash buckets and replicates the halo side."""
-    n = 400
-    lon, lat = truth_lonlat
-    lon, lat = lon[:n], lat[:n]
-    pdf = spark.createDataFrame(
-        [(int(i), float(lon[i]), float(lat[i])) for i in range(n)],
-        "pt_id long, lon double, lat double",
-    )
-    plain = sorted((r["a"], r["b"]) for r in sj.distance_join(pdf, 0.15).collect())
-    salted = sorted((r["a"], r["b"]) for r in
-                    sj.distance_join(pdf, 0.15, salt=4).collect())
-    assert plain == salted and len(plain) > 0
-
-
 def test_thinning_deterministic_and_sparse(spark, truth_lonlat):
     n = 400
     lon, lat = truth_lonlat
@@ -221,22 +205,9 @@ def test_verify_invariants_contract(spark, fixture_dir):
     assert rows["quant"]["min_psnr"] >= 40.0
 
 
-def test_codegen_assign_equals_rtree(spark, fixture_dir, poly_index):
-    """The compiled CASE-chain strategy must match the index probe
-    row-for-row (same lowest-unit-id tie-break)."""
-    imgs = spark.read.parquet(fixture_dir + "/images.parquet")
-    pts = sj.with_footprint(imgs.select("image_id"))
-    a = sorted((r["image_id"], r["unit_id"]) for r in
-               sj.assign_tiles(spark, pts, poly_index).collect())
-    b = sorted((r["image_id"], r["unit_id"]) for r in
-               sj.assign_tiles_codegen(pts, poly_index).collect())
-    assert a == b
-
-
 def test_assign_tiles_concave_polygons(spark):
-    """The index probe path must handle NON-convex polygons (where the
-    codegen strategy refuses): L-shape and notched rectangle vs brute
-    force on a point grid."""
+    """The index probe path must handle NON-convex polygons: L-shape and
+    notched rectangle vs the driver-side probe on a point grid."""
     L = (np.array([0, 4, 4, 2, 2, 0], float), np.array([0, 0, 2, 2, 4, 4], float))
     notch = (np.array([5, 9, 9, 7.5, 7, 6.5, 5], float),
              np.array([0, 0, 4, 4, 1.5, 4, 4], float))
@@ -252,10 +223,6 @@ def test_assign_tiles_concave_polygons(spark):
     ti, tu = pi.probe(px, py)
     truth = {int(i): int(u) for i, u in zip(ti, tu)}
     assert got == truth
-    # and codegen correctly refuses the concave set
-    import pytest as _pt
-    with _pt.raises(ValueError, match="not strictly convex"):
-        sj.assign_tiles_codegen(pdf, pi)
 
 
 def test_cell_expr_matches_numpy_encode(spark):
